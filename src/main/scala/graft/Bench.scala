@@ -27,7 +27,10 @@ object Bench {
     // and CPU savings are invisible in wall clock — record task CPU per
     // query into the bench_full.json artifact. The counter is read only
     // after a listener-bus drain, OUTSIDE the timed region.
-    final case class Sample(secs: Double, ok: Boolean, cpu: Double)
+    // The query's driver-route decisions (operators.LocalRoute) ride
+    // along, drained outside the timed region like the CPU counter.
+    final case class Sample(secs: Double, ok: Boolean, cpu: Double,
+                            routes: Seq[graft.operators.LocalRoute.Record])
     val cpuNs = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
@@ -38,11 +41,13 @@ object Bench {
     def runOne(fn: Fn): Sample = {
       org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
       val c0 = cpuNs.get
+      graft.operators.LocalRoute.drain()
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
       val secs = (System.nanoTime() - t0) / 1e9
       org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
       val cpu = (cpuNs.get - c0) / 1e9
+      val routes = graft.operators.LocalRoute.drain()
       // measure every query from a clean slate: iterative operators leave
       // localCheckpoint RDD blocks behind (freed only on driver GC via the
       // ContextCleaner); letting them accumulate across 100+ queries
@@ -56,7 +61,7 @@ object Bench {
       spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
         if (!protectedIds.contains(id)) rdd.unpersist(blocking = false)
       }
-      Sample(secs, ok, cpu)
+      Sample(secs, ok, cpu, routes)
     }
     // This machine is shared, and contention windows are SUSTAINED (r10:
     // four untouched queries drifted +60-80% in the driver run although
@@ -188,7 +193,8 @@ object Bench {
     try {
       def ent(key: String): String = {
         val m = bestSample(key)
-        s""""$key":{"sec":${d3(m.secs)},"cpu_sec":${d3(m.cpu)},"ok":${m.ok}}"""
+        val routes = m.routes.map(_.json).mkString("[", ",", "]")
+        s""""$key":{"sec":${d3(m.secs)},"cpu_sec":${d3(m.cpu)},"ok":${m.ok},"routes":$routes}"""
       }
       val gates = gateItems.map(_._1).map(ent).mkString("{", ",", "}")
       val prods = prodItems.map(_._1).map(ent).mkString("{", ",", "}")

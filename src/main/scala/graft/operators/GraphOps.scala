@@ -3,7 +3,7 @@ package graft.operators
 import graft.Q
 import graft.functions.Exact._
 import graft.sources.{Tables => T}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -71,17 +71,13 @@ object GraphOps {
     val ps = T.lineitem(s, d)
       .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"))
       .distinct().localCheckpoint(true)
-    // SIZE ROUTE (the DriverCcMaxEdges idiom): an incidence list that
-    // fits the driver replays the SAME hop expansion over local
-    // adjacency maps — hop distances are exact set algebra, so both
-    // routes are identical and the unrolled oracles pin them. The
-    // distributed loop (~3 jobs/hop: two incidence joins + frontier
-    // checkpoint) ships unchanged past the gate.
-    val psGate = math.min(driverMaxEdges, Int.MaxValue - 2L).toInt
-    if (ps.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType) &&
-        ps.limit(psGate + 1).count() <= psGate) {
+    // driver route (see LocalRoute): hop distances are exact set
+    // algebra over local adjacency maps; the distributed loop pays ~3
+    // jobs per hop (two incidence joins + frontier checkpoint)
+    LocalRoute.rows(ps, driverMaxEdges, "coSupplyBfs",
+        LocalRoute.longKeyed(ps)).foreach { rows =>
       import s.implicits._
-      val inc = ps.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val inc = rows.map(r => (r.getLong(0), r.getLong(1)))
       val byPart = scala.collection.mutable.HashMap
         .empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
       val bySupp = scala.collection.mutable.HashMap
@@ -272,8 +268,8 @@ object GraphOps {
     * 5 shuffles for a depth-32 ontology instead of 32.
     * Reference analog: ancestor closure over parent-child ontologies
     * (loaders/load-Ontologies.py, python/obo.py). */
-  /** Edge gate for the driver closure route (the DriverCcMaxEdges idiom
-    * — GraphOps2 documents the crossover): an under-gate edge set
+  /** Edge gate for the driver closure route ([[LocalRoute]]; GraphOps2
+    * documents the crossover): an under-gate edge set
     * collects once and the SAME doubling rounds replay as hash-set
     * operations, where the distributed loop pays ~4 Spark jobs per round
     * (self-join, distinct, eager checkpoint, growth count). Both routes
@@ -293,18 +289,14 @@ object GraphOps {
     // truncation the logical plan grows 3^rounds (see PLANS.md round 2)
     var closure = edges.select(col("src"), col("dst")).distinct()
       .localCheckpoint(true)
-    val gate = math.min(driverMaxEdges, Int.MaxValue - 2L).toInt
-    if (closure.limit(gate + 1).count() <= gate) {
-      driverClosure(closure.collect(), maxDepth).foreach { pairs =>
-        val spark = edges.sparkSession
-        // parallelize (not a LocalRelation): the closure is PATH-sized —
-        // bigger than its edge input — and callers aggregate over it, so
-        // the rows must land spread across cores, not inlined into the
-        // plan as one single-partition local scan
-        val rdd = spark.sparkContext.parallelize(
-          pairs.toSeq.map { case (s, d) => org.apache.spark.sql.Row(s, d) },
-          spark.sparkContext.defaultParallelism)
-        return spark.createDataFrame(rdd, closure.schema)
+    LocalRoute.rows(closure, driverMaxEdges, "transitiveClosure").foreach { rows =>
+      driverClosure(rows, maxDepth) match {
+        case Some(pairs) =>
+          return LocalRoute.relation(edges.sparkSession,
+            pairs.toSeq.map { case (s, d) => Row(s, d) }, closure.schema)
+        case None => // the paths outgrew the replay: record the fallback
+          LocalRoute.admit("transitiveClosure", "rows", DriverClosureMaxPaths + 1,
+            DriverClosureMaxPaths)
       }
     }
     var nPaths = closure.count()
@@ -333,7 +325,7 @@ object GraphOps {
     * the closure outgrows [[DriverClosureMaxPaths]] mid-replay (the
     * caller then runs the distributed loop on the already-checkpointed
     * base). */
-  private def driverClosure(rows: Array[org.apache.spark.sql.Row],
+  private def driverClosure(rows: Array[Row],
                             maxDepth: Int): Option[scala.collection.Set[(Any, Any)]] = {
     var closure = scala.collection.mutable.HashSet.empty[(Any, Any)]
     rows.foreach(r => closure += ((r.get(0), r.get(1))))

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Q
 import graft.sources.{Tables => T}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -45,8 +45,8 @@ object GraphOps2 {
     // the double checkpoint was a full extra pass per query).
     val e = if (inputMaterialized) edges.select("src", "dst")
             else e0Checkpoint(edges.select("src", "dst"))
-    smallLongEdges(e, driverMaxEdges).foreach { arr =>
-      return driverPrRounds(e.sparkSession, arr, seeds = None, iters)
+    LocalRoute.rows(e, driverMaxEdges, "pagerankInt", LocalRoute.longKeyed(e)).foreach { rows =>
+      return driverPrRounds(e.sparkSession, longPairs(rows), seeds = None, iters)
     }
     val deg = e0Checkpoint(e.groupBy("src").agg(count(lit(1)).as("d")))
     // degree folded into the edge table ONCE: each round then needs a
@@ -83,41 +83,8 @@ object GraphOps2 {
     * LogicalRDD — constant-size plans across iterative rounds. */
   private def e0Checkpoint(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
-  /** SIZE-ROUTING for the fixed-round iterative ops (r10, the
-    * [[connectedComponents]] driver-route generalized): every round of a
-    * distributed iteration pays a handful of Spark jobs (join + agg +
-    * checkpoint), which dominates wall time whenever the graph itself is
-    * small — and the bipartite incidence / near-dup graphs these queries
-    * iterate are edge-table-sized, not corpus-sized. All four routed ops
-    * (pagerank, PPR, SSSP, label propagation) are INTEGER-EXACT with
-    * deterministic tie-breaks, so a driver replay of the same rounds is
-    * bit-identical to the distributed plan — the DuckDB oracles pin it
-    * per query. Returns the collected (src, dst) array when the
-    * (long-keyed) edge set fits [[DriverCcMaxEdges]]; None keeps the
-    * distributed loop. `e` must already be checkpointed (the count is a
-    * cached-RDD pass). */
-  /** The routing probe all size-routed ops share: if every column is
-    * long-keyed, a bounded `limit(gate+1).count()` decides the route
-    * EXECUTOR-side (the global limit gathers at most gate+1 rows to one
-    * task, never to the driver), and only an under-gate graph is then
-    * collected for the driver replay. An over-gate graph costs one
-    * bounded memory scan of the checkpointed edges and materializes
-    * NOTHING on the driver — collecting the gate+1 prefix just to
-    * discard it would allocate ~gate boxed Rows (hundreds of MB at the
-    * 4M gate) on the exact path that routes away from the driver
-    * (review r11). `e` must already be checkpointed (probe, collect,
-    * and the distributed loop all read the materialized blocks). */
-  private def probeRows(e: DataFrame, maxEdges: Long): Option[Array[org.apache.spark.sql.Row]] = {
-    if (!e.schema.fields.forall(_.dataType ==
-        org.apache.spark.sql.types.LongType)) return None
-    val gate = math.min(maxEdges, Int.MaxValue - 2L).toInt
-    if (e.limit(gate + 1).count() > gate) None
-    else Some(e.collect())
-  }
-
-  private def smallLongEdges(e: DataFrame,
-                             maxEdges: Long): Option[Array[(Long, Long)]] =
-    probeRows(e, maxEdges).map(_.map(r => (r.getLong(0), r.getLong(1))))
+  private def longPairs(rows: Array[Row]): Array[(Long, Long)] =
+    rows.map(r => (r.getLong(0), r.getLong(1)))
 
   /** Node-count ceiling under which the per-round NODE-sized tables
     * (ranks, labels, tentative distances) broadcast instead of shuffle —
@@ -173,10 +140,10 @@ object GraphOps2 {
              inputMaterialized: Boolean = false): DataFrame = {
     val e = if (inputMaterialized) edges.select("src", "dst") // see pagerankInt
             else e0Checkpoint(edges.select("src", "dst"))
-    smallLongEdges(e, driverMaxEdges).foreach { arr =>
+    LocalRoute.rows(e, driverMaxEdges, "pprInt", LocalRoute.longKeyed(e)).foreach { rows =>
       val seedSet = seeds.select(col("node").cast("long")).distinct()
         .collect().map(_.getLong(0)).toSet
-      return driverPrRounds(e.sparkSession, arr, Some(seedSet), iters)
+      return driverPrRounds(e.sparkSession, longPairs(rows), Some(seedSet), iters)
     }
     val deg = e0Checkpoint(e.groupBy("src").agg(count(lit(1)).as("d")))
     // same degree-folded edge table as pagerankInt: one join per round
@@ -242,26 +209,6 @@ object GraphOps2 {
     pagerankInt(edges, 3, inputMaterialized = true).orderBy("node")
   }
 
-  /** Connected components via alternating LARGE-STAR / SMALL-STAR
-    * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14) — the canonical shuffle-parallel CC:
-    *
-    *  - large-star(u): every neighbor v > u re-points at
-    *    m = min(Γ(u) ∪ {u});
-    *  - small-star(u): u and its smaller neighbors all re-point at their
-    *    minimum.
-    *
-    * Each phase is one groupBy-min + one equi-join; the edge set
-    * converges to a star forest whose centers are the component MINIMA,
-    * in O(log²) rounds on any topology — a depth-d chain collapses in
-    * ~log d rounds where plain min-contraction needs d (the r7 judge's
-    * deep-graph caveat; IncrCcSpec pins a 256-node path). Every phase is
-    * eagerly localCheckpoint'ed: iterative plans must be truncated or
-    * Catalyst itself becomes the bottleneck (plan size, stats
-    * estimation). On a cluster, use a reliable checkpoint dir.
-    * Returns (node, lbl = component min) for every edge endpoint;
-    * convergence is verified structurally (src/dst disjoint + unique
-    * parent per child), so a partial merge can never return silently. */
   /** Edge-count gate below which the iterative graph ops run as driver
     * replays (union-find / integer rounds): 4M edges collect to ~64 MB
     * and replay in well under a second, where the distributed loops pay
@@ -340,12 +287,33 @@ object GraphOps2 {
     else expansionTasks(spark, wedgeVolume(inc, key))
   }
 
+  /** Connected components via alternating LARGE-STAR / SMALL-STAR
+    * contraction (Kiveris et al., "Connected Components in MapReduce and
+    * Beyond", SoCC'14) — the canonical shuffle-parallel CC:
+    *
+    *  - large-star(u): every neighbor v > u re-points at
+    *    m = min(Γ(u) ∪ {u});
+    *  - small-star(u): u and its smaller neighbors all re-point at their
+    *    minimum.
+    *
+    * Each phase is one groupBy-min + one equi-join; the edge set
+    * converges to a star forest whose centers are the component MINIMA,
+    * in O(log²) rounds on any topology — a depth-d chain collapses in
+    * ~log d rounds where plain min-contraction needs d (the r7 judge's
+    * deep-graph caveat; IncrCcSpec pins a 256-node path). Every phase is
+    * eagerly localCheckpoint'ed: iterative plans must be truncated or
+    * Catalyst itself becomes the bottleneck (plan size, stats
+    * estimation). On a cluster, use a reliable checkpoint dir.
+    * Returns (node, lbl = component min) for every edge endpoint;
+    * convergence is verified structurally (src/dst disjoint + unique
+    * parent per child), so a partial merge can never return silently. */
   def connectedComponents(edges: DataFrame, maxIters: Int,
                           driverMaxEdges: Long = DriverCcMaxEdges): DataFrame = {
     val e0 = e0Checkpoint(edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")))
-    smallLongEdges(e0, driverMaxEdges).foreach { arr =>
-      return driverComponents(edges.sparkSession, arr)
+    LocalRoute.rows(e0, driverMaxEdges, "connectedComponents",
+        LocalRoute.longKeyed(e0)).foreach { rows =>
+      return driverComponents(edges.sparkSession, longPairs(rows))
     }
     val nodes = e0Checkpoint(e0.select(col("src").as("node"))
       .union(e0.select(col("dst").as("node"))).distinct())
@@ -638,7 +606,9 @@ object GraphOps2 {
                        inputMaterialized: Boolean = false): DataFrame = {
     val e = if (inputMaterialized) symEdges.select("src", "dst") // see pagerankInt
             else e0Checkpoint(symEdges.select("src", "dst"))
-    smallLongEdges(e, driverMaxEdges).foreach { arr =>
+    LocalRoute.rows(e, driverMaxEdges, "labelPropagation",
+        LocalRoute.longKeyed(e)).foreach { rows =>
+      val arr = longPairs(rows)
       val spark = symEdges.sparkSession
       import spark.implicits._
       // round semantics mirrored exactly: contributions flow along edges
@@ -816,10 +786,7 @@ object GraphOps2 {
               inputMaterialized: Boolean = false): DataFrame = {
     val e = if (inputMaterialized) edges.select(col("src"), col("dst"), col("w"))
             else e0Checkpoint(edges.select(col("src"), col("dst"), col("w"))) // see pagerankInt
-    // size route (see probeRows): min-plus over longs replays
-    // bit-identically on the driver; the weighted probe is its own
-    // shape, but the gate is the same
-    probeRows(e, driverMaxEdges).foreach { rows =>
+    LocalRoute.rows(e, driverMaxEdges, "ssspInt", LocalRoute.longKeyed(e)).foreach { rows =>
       val spark = edges.sparkSession
       import spark.implicits._
       val arr = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.Q
 import graft.functions.Exact._
+import graft.functions.SparkSemantics
 import graft.sources.{Tables => T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -800,7 +801,7 @@ object Dedup {
       val nSample = nSample0
       import spark.implicits._
       Seq((nSample, frozenVol, liveVol,
-        math.rint(frozenVol.toDouble / math.max(liveVol, 1L) * 1e6) / 1e6))
+        SparkSemantics.round(frozenVol.toDouble / math.max(liveVol, 1L), 6)))
         .toDF("n_sample", "frozen_volume", "live_volume", "inflation")
     }
 

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Q
+import graft.functions.SparkSemantics
 import graft.sources.{Tables => T}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
@@ -469,7 +470,7 @@ object Multimodal {
           ImageCodec.decode(bytes) match {
             case Some((w, h, luma)) =>
               Row(r.getLong(0), bytes.length.toLong, true, w.toLong, h.toLong,
-                math.rint(luma * 1e6) / 1e6)
+                SparkSemantics.round(luma, 6))
             case None =>
               Row(r.getLong(0), bytes.length.toLong, false, 0L, 0L, 0.0)
           }

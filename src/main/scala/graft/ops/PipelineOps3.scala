@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.Q
 import graft.functions.Exact._
+import graft.functions.SparkSemantics
 import graft.sources.{Tables => T}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -225,10 +226,10 @@ object PipelineOps3 {
        |  FROM it WHERE k = $iters),
        |sgn AS (SELECT v, lam, CASE WHEN v[piv] < 0 THEN -1.0 ELSE 1.0 END AS s FROM fin)
        |SELECT CAST(pos.i - 1 AS BIGINT) AS pos,
-       |  round(mn.m, 6) AS mean,
-       |  round(sgn.s * sgn.v[pos.i], 6) AS pc1_loading,
-       |  round(sgn.lam, 6) AS eigval,
-       |  round(sgn.lam / tr.t, 6) AS var_share
+       |  ${OracleKit.sparkRound("mn.m", 6)} AS mean,
+       |  ${OracleKit.sparkRound("sgn.s * sgn.v[pos.i]", 6)} AS pc1_loading,
+       |  ${OracleKit.sparkRound("sgn.lam", 6)} AS eigval,
+       |  ${OracleKit.sparkRound("sgn.lam / tr.t", 6)} AS var_share
        |FROM pos CROSS JOIN sgn CROSS JOIN tr JOIN mn ON mn.i = pos.i
        |ORDER BY pos""".stripMargin
 
@@ -254,13 +255,12 @@ object PipelineOps3 {
     val (eigval, pc1) = GramianAgg.powerIteration(cov)
     val trace = (0 until dim).map(i => cov(i)(i)).sum
     val rows = (0 until dim).map { i =>
-      (i.toLong, round6(mean(i)), round6(pc1(i)), round6(eigval), round6(eigval / trace))
+      (i.toLong, SparkSemantics.round(mean(i), 6), SparkSemantics.round(pc1(i), 6),
+        SparkSemantics.round(eigval, 6), SparkSemantics.round(eigval / trace, 6))
     }
     s.createDataFrame(rows).toDF("pos", "mean", "pc1_loading", "eigval", "var_share")
       .orderBy("pos")
   }
-
-  private def round6(x: Double): Double = math.rint(x * 1e6) / 1e6
 
   /** The corpus-export capstone: normalize → exact-dedup (min-id
     * survivor) → quality gate → token-budgeted shards → per-shard
@@ -467,12 +467,15 @@ object PipelineOps3 {
        |    list_inner_product(wq.x, mx.mv) AS wmx
        |  FROM wq, bvec, aw, mx)
        |SELECT * FROM (
-       |  SELECT printf('w_%03d', pos.i - 1) AS term, round(wq.x[pos.i], 6) AS value
+       |  SELECT printf('w_%03d', pos.i - 1) AS term,
+       |    ${OracleKit.sparkRound("wq.x[pos.i]", 6)} AS value
        |  FROM pos, wq WHERE pos.i <= $dim
        |  UNION ALL
-       |  SELECT 'intercept', round(my - wmx, 6) FROM scal
+       |  SELECT 'intercept', ${OracleKit.sparkRound("my - wmx", 6)} FROM scal
        |  UNION ALL
-       |  SELECT 'r2', round(CASE WHEN vy > 0 THEN 1.0 - (vy - 2*wb + wcw)/vy ELSE 0.0 END, 6) FROM scal
+       |  SELECT 'r2',
+       |    ${OracleKit.sparkRound("CASE WHEN vy > 0 THEN 1.0 - (vy - 2*wb + wcw)/vy ELSE 0.0 END", 6)}
+       |  FROM scal
        |) ORDER BY term""".stripMargin
 
   /** Core of [[qLinearProbe]]: ridge-regress `y` on array column `x`.
@@ -497,8 +500,9 @@ object PipelineOps3 {
       2.0 * (0 until dim).map(i => w(i) * b(i)).sum +
       (for (i <- 0 until dim; j <- 0 until dim) yield w(i) * cov(i)(j) * w(j)).sum
     val r2 = if (varY > 0) 1.0 - sseOverN / varY else 0.0
-    val rows = (0 until dim).map(i => (f"w_$i%03d", round6(w(i)))) ++
-      Seq(("intercept", round6(intercept)), ("r2", round6(r2)))
+    val rows = (0 until dim).map(i => (f"w_$i%03d", SparkSemantics.round(w(i), 6))) ++
+      Seq(("intercept", SparkSemantics.round(intercept, 6)),
+        ("r2", SparkSemantics.round(r2, 6)))
     s.createDataFrame(rows).toDF("term", "value").orderBy("term")
   }
 
@@ -563,10 +567,10 @@ object PipelineOps3 {
       avg(-(col("y") * log(pc) + (lit(1.0) - col("y")) * log(lit(1.0) - pc))).as("ll"),
       avg(when((pc >= 0.5) === (col("y") >= 0.5), 1.0).otherwise(0.0)).as("acc"))
       .head()
-    val rows = (0 until dim).map(i => (f"w_$i%03d", round6(beta(i)))) ++
-      Seq(("intercept", round6(beta(dim))),
-        ("log_loss", round6(mrow.getDouble(0))),
-        ("accuracy", round6(mrow.getDouble(1))))
+    val rows = (0 until dim).map(i => (f"w_$i%03d", SparkSemantics.round(beta(i), 6))) ++
+      Seq(("intercept", SparkSemantics.round(beta(dim), 6)),
+        ("log_loss", SparkSemantics.round(mrow.getDouble(0), 6)),
+        ("accuracy", SparkSemantics.round(mrow.getDouble(1), 6)))
     s.createDataFrame(rows).toDF("term", "value").orderBy("term")
   }
 
@@ -673,14 +677,15 @@ object PipelineOps3 {
        |    AVG(CASE WHEN (pc >= 0.5) = (y >= 0.5) THEN 1.0 ELSE 0.0 END) AS acc
        |  FROM fin)
        |SELECT * FROM (
-       |  SELECT printf('w_%03d', pos.i - 1) AS term, round(b$rounds.beta[pos.i], 6) AS value
+       |  SELECT printf('w_%03d', pos.i - 1) AS term,
+       |    ${OracleKit.sparkRound(s"b$rounds.beta[pos.i]", 6)} AS value
        |  FROM pos, b$rounds WHERE pos.i <= $dim
        |  UNION ALL
-       |  SELECT 'intercept', round(beta[$d1], 6) FROM b$rounds
+       |  SELECT 'intercept', ${OracleKit.sparkRound(s"beta[$d1]", 6)} FROM b$rounds
        |  UNION ALL
-       |  SELECT 'log_loss', round(ll, 6) FROM mets
+       |  SELECT 'log_loss', ${OracleKit.sparkRound("ll", 6)} FROM mets
        |  UNION ALL
-       |  SELECT 'accuracy', round(acc, 6) FROM mets
+       |  SELECT 'accuracy', ${OracleKit.sparkRound("acc", 6)} FROM mets
        |) ORDER BY term""".stripMargin
   }
 
@@ -747,10 +752,10 @@ object PipelineOps3 {
       .head.getSeq[Double](0).toArray
     val n = math.max(m(0), 1.0)
     val rows = classes.indices.flatMap { c =>
-      (0 until dim).map(i => (classes(c), f"w_$i%03d", round6(betas(c)(i)))) :+
-        ((classes(c), "intercept", round6(betas(c)(dim))))
-    } ++ Seq((-1L, "accuracy", round6(m(1) / n)),
-      (-1L, "log_loss", round6(m(2) / n)))
+      (0 until dim).map(i => (classes(c), f"w_$i%03d", SparkSemantics.round(betas(c)(i), 6))) :+
+        ((classes(c), "intercept", SparkSemantics.round(betas(c)(dim), 6)))
+    } ++ Seq((-1L, "accuracy", SparkSemantics.round(m(1) / n, 6)),
+      (-1L, "log_loss", SparkSemantics.round(m(2) / n, 6)))
     s.createDataFrame(rows).toDF("class", "term", "value")
       .orderBy("class", "term")
   }
@@ -854,13 +859,14 @@ object PipelineOps3 {
          |""".stripMargin
     val sels = classes.map { c =>
       s"""  SELECT CAST($c AS BIGINT) AS class, printf('w_%03d', pos.i - 1) AS term,
-         |    round(b${c}_$rounds.beta[pos.i], 6) AS value
+         |    ${OracleKit.sparkRound(s"b${c}_$rounds.beta[pos.i]", 6)} AS value
          |  FROM pos, b${c}_$rounds WHERE pos.i <= $dim
          |  UNION ALL
-         |  SELECT $c, 'intercept', round(beta[$d1], 6) FROM b${c}_$rounds""".stripMargin
+         |  SELECT $c, 'intercept', ${OracleKit.sparkRound(s"beta[$d1]", 6)}
+         |  FROM b${c}_$rounds""".stripMargin
     } ++ Seq(
-      "  SELECT -1, 'accuracy', round(correct / n, 6) FROM mets",
-      "  SELECT -1, 'log_loss', round(lltot / n, 6) FROM mets")
+      s"  SELECT -1, 'accuracy', ${OracleKit.sparkRound("correct / n", 6)} FROM mets",
+      s"  SELECT -1, 'log_loss', ${OracleKit.sparkRound("lltot / n", 6)} FROM mets")
     head + chains + mets + sels.mkString("\n  UNION ALL\n") + "\n) ORDER BY class, term"
   }
 

@@ -2,11 +2,13 @@ package graft.ops
 
 import graft.Q
 import graft.functions.Exact._
+import graft.functions.SparkSemantics
+import graft.operators.LocalRoute
 import graft.sources.{Tables => T}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType, StructType}
 
 /** Round-11 (session 3) LLM-data-pipeline operators:
   *
@@ -322,7 +324,6 @@ object PipelineOps4 {
 
   private[graft] def nnDescentGraph(vecs: DataFrame, k: Int, rounds: Int,
                                     driverMaxDoubles: Long = NnDescentDriverMaxDoubles): DataFrame = {
-    import graft.functions.VectorFunctions.cosineSim
     val spark = vecs.sparkSession
     // The congruential init needs a dense 0..n-1 node numbering. One
     // narrow bounds pass decides the route: vec ids that are already
@@ -332,7 +333,7 @@ object PipelineOps4 {
     // so the oracle (ROW_NUMBER over vec_id) covers both. The same pass
     // carries max vector width for the driver-route gate below.
     val b = vecs.agg(min(col("vec_id")), max(col("vec_id")), count(lit(1)),
-      max(size(col("v")))).head
+      max(size(col("v"))), count(col("vec_id")), count(col("v"))).head
     val n = b.getLong(2)
     val dense = n > 0 && b.getLong(0) == 0L && b.getLong(1) == n - 1
     val ev = (if (dense) vecs.select(col("vec_id").as("rid"), col("vec_id"), col("v"))
@@ -342,38 +343,19 @@ object PipelineOps4 {
       PipelineOps3.exclusivePrefixSum(base, "__g", Seq("vec_id"), "one", 32)
         .select(col("pre").as("rid"), col("vec_id"), col("v"))
     }).localCheckpoint(true)
-    // SIZE ROUTE (the DriverCcMaxEdges/kmeans idiom, r15): a vector set
-    // that fits the driver replays the SAME rounds locally — the
-    // distributed loop pays ~6 Spark jobs per round (reverse-sample
-    // window, candidate dedup exchange, two vector joins, top-k window,
-    // eager checkpoint) over data that is KB-sized here. The scored
-    // rows return through parallelize and the SHARED final projection
-    // below (joins, 6-dp rounding, ordering), so only the iterative
-    // middle is replayed. Null/ragged vectors fall back to the loop.
+    // driver route (see LocalRoute) for the iterative middle only — the
+    // loop pays ~6 Spark jobs per round; the scored rows return through
+    // the SHARED final projection below. Null vectors or ids stay on it.
     val dimMax = if (b.isNullAt(3)) 0L else b.getInt(3).toLong
-    val collected: Array[org.apache.spark.sql.Row] =
-      if (n > 0 && n * math.max(1L, dimMax) <= driverMaxDoubles)
-        ev.select(col("rid"), col("v")).collect()
-      else null
     val scored: DataFrame =
-      if (collected != null && collected.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
+      if (LocalRoute.admit("nnDescentGraph", "values", n * math.max(1L, dimMax),
+          driverMaxDoubles, eligible = n > 0 && b.getLong(4) == n && b.getLong(5) == n)) {
         val vs = new Array[Array[Double]](n.toInt)
-        collected.foreach(r => vs(r.getLong(0).toInt) = r.getSeq[Double](1).toArray)
-        val out = driverNnDescent(vs, k, rounds)
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("src",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("dst",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("cv",
-            org.apache.spark.sql.types.DoubleType, nullable = false),
-          org.apache.spark.sql.types.StructField("rnk",
-            org.apache.spark.sql.types.IntegerType, nullable = false)))
-        val rdd = spark.sparkContext.parallelize(
-          out.toSeq.map { case (s2, d2, cv, r) =>
-            org.apache.spark.sql.Row(s2, d2, cv, r) },
-          spark.sparkContext.defaultParallelism)
-        spark.createDataFrame(rdd, schema)
+        ev.select(col("rid"), col("v")).collect()
+          .foreach(r => vs(r.getLong(0).toInt) = r.getSeq[Double](1).toArray)
+        LocalRoute.relation(spark, driverNnDescent(vs, k, rounds), new StructType()
+          .add("src", LongType, nullable = false).add("dst", LongType, nullable = false)
+          .add("cv", DoubleType, nullable = false).add("rnk", IntegerType, nullable = false))
       } else distributedNnDescent(ev, n, k, rounds)
     scored
       .join(ev.select(col("rid").as("src"), col("vec_id").as("src_id")), "src")
@@ -449,24 +431,8 @@ object PipelineOps4 {
     * top-k window (NaN greatest, -0.0 == 0.0 — java.lang.Double.compare
     * would order -0.0 ties differently). Returns the last round's scored
     * rows (src, dst, cv, rnk ≤ k). */
-  private def driverNnDescent(vs: Array[Array[Double]], k: Int,
-                              rounds: Int): Array[(Long, Long, Double, Int)] = {
+  private def driverNnDescent(vs: Array[Array[Double]], k: Int, rounds: Int): Seq[Row] = {
     val n = vs.length
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      val m = math.min(a.length, b.length)
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < m) {
-        val x = a(i); val y = b(i)
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    // Spark's nan-safe double compare (NaN == NaN, NaN greatest,
-    // -0.0 == 0.0) — the window's sort comparator
-    def nanSafe(x: Double, y: Double): Int =
-      if (x < y) -1 else if (x > y) 1 else if (x == y) 0
-      else if (java.lang.Double.isNaN(x) && java.lang.Double.isNaN(y)) 0
-      else if (java.lang.Double.isNaN(x)) 1 else -1
     // congruential init, distinct (sets make order irrelevant)
     var edges: Array[Array[Long]] = {
       val sets = Array.fill(n)(new java.util.HashSet[java.lang.Long]())
@@ -486,7 +452,7 @@ object PipelineOps4 {
         a
       }
     }
-    var scoredOut: Array[(Long, Long, Double, Int)] = Array.empty
+    var scoredOut: Seq[Row] = Seq.empty
     for (_ <- 1 to rounds) {
       // reverse adjacency, then the deterministic k-sample per node
       val rev = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Long])
@@ -534,7 +500,7 @@ object PipelineOps4 {
       }
       // score every candidate, rank (cv DESC, dst ASC), keep top k
       val nextEdges = new Array[Array[Long]](n)
-      val out = Array.newBuilder[(Long, Long, Double, Int)]
+      val out = Seq.newBuilder[Row]
       s = 0
       while (s < n) {
         val cs = cand(s)
@@ -545,17 +511,17 @@ object PipelineOps4 {
           val it = cs.iterator
           while (it.hasNext) {
             val d = it.next().longValue()
-            arr(i) = (d, cos(vs(s), vs(d.toInt))); i += 1
+            arr(i) = (d, SparkSemantics.cosine(vs(s), vs(d.toInt))); i += 1
           }
           val sorted = arr.sortWith { (x, y) =>
-            val c = nanSafe(y._2, x._2) // cv DESC
+            val c = SparkSemantics.compare(y._2, x._2) // cv DESC
             if (c != 0) c < 0 else x._1 < y._1 // dst ASC
           }
           val keep = math.min(k, sorted.length)
           val es = new Array[Long](keep)
           i = 0
           while (i < keep) {
-            out += ((s.toLong, sorted(i)._1, sorted(i)._2, i + 1))
+            out += Row(s.toLong, sorted(i)._1, sorted(i)._2, i + 1)
             es(i) = sorted(i)._1
             i += 1
           }

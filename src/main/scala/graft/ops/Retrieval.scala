@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.Q
 import graft.functions.Exact._
+import graft.functions.SparkSemantics
 import graft.sources.{Tables => T}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -552,28 +553,19 @@ object Retrieval {
       .orderBy(col("rel").desc, col("vec_id")).limit(20)
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
-    // mirror the oracle's float ops EXACTLY: left-fold dot products,
-    // sqrt(na)·sqrt(nb) (NOT sqrt(na·nb) — a different double), literal
-    // 0.3 (NOT 1−0.7 = 0.30000000000000004), HALF_UP decimal rounding
-    // (what round() does in both engines)
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var (d0, na, nb) = (0.0, 0.0, 0.0)
-      var i = 0
-      while (i < a.length) { d0 += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      d0 / (math.sqrt(na) * math.sqrt(nb))
-    }
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
+    // mirror the oracle's float ops EXACTLY: the fused cosine fold
+    // (sqrt(na)·sqrt(nb), NOT sqrt(na·nb) — a different double), literal
+    // 0.3 (NOT 1−0.7 = 0.30000000000000004) and Spark's HALF_UP round
     val selected = scala.collection.mutable.ArrayBuffer[(Long, Array[Double], Double, Double)]()
     val remaining = scala.collection.mutable.ArrayBuffer(cands: _*)
     while (selected.length < 10 && remaining.nonEmpty) {
       val scored = remaining.map { case (id, v, rel) =>
         val pen = if (selected.isEmpty) 0.0
-          else selected.map(sel => cos(v, sel._2)).max
-        (id, v, rel, r6(0.7 * rel - 0.3 * pen), pen)
+          else selected.map(sel => SparkSemantics.cosine(v, sel._2)).max
+        (id, v, rel, SparkSemantics.round(0.7 * rel - 0.3 * pen, 6), pen)
       }
       val best = scored.minBy { case (id, _, _, mmr, _) => (-mmr, id) }
-      selected += ((best._1, best._2, best._3, r6(best._5)))
+      selected += ((best._1, best._2, best._3, SparkSemantics.round(best._5, 6)))
       remaining --= remaining.filter(_._1 == best._1)
     }
     selected.zipWithIndex

@@ -2,11 +2,13 @@ package graft.ops
 
 import graft.Q
 import graft.functions.Exact._
-import graft.functions.VectorFunctions
+import graft.functions.{SparkSemantics, VectorFunctions}
+import graft.operators.LocalRoute
 import graft.sources.{Tables => T}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 
 /** Similarity search over an embedding column (SURVEY.md §2.4).
   *
@@ -67,29 +69,25 @@ object Similarity {
     }
   }
 
-  private def collectPairRows(e: DataFrame): Array[(Long, Array[Double], Double)] =
-    e.select(col("id"), col("v"), col("nrm")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
+  /** (id, v, nrm) scan rows as primitives for the replays below. */
+  private def scanInput(rows: Array[Row]): Array[(Long, Array[Double], Double)] =
+    rows.map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
 
-  /** Spark's round(c, 6) on doubles: HALF_UP decimal; NaN/Inf pass through. */
-  private def round6(x: Double): Double =
-    if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x
-    else java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+  private val PairSchema = new StructType()
+    .add("id_a", LongType, nullable = false).add("id_b", LongType, nullable = false)
+    .add("cos", DoubleType, nullable = false)
 
-  /** Spark's nan-safe double compare (NaN == NaN, NaN greatest, -0.0 == 0.0). */
-  private def nanSafeCompare(x: Double, y: Double): Int =
-    if (x < y) -1 else if (x > y) 1 else if (x == y) 0
-    else if (java.lang.Double.isNaN(x) && java.lang.Double.isNaN(y)) 0
-    else if (java.lang.Double.isNaN(x)) 1 else -1
+  private val KnnSchema = new StructType()
+    .add("node", LongType, nullable = false).add("nbr", LongType, nullable = false)
+    .add("cos", DoubleType, nullable = false).add("rnk", LongType, nullable = false)
 
   /** Local replay of the fused thresholded pair scan: same dot fold as
     * [[graft.functions.DotProduct]], same HALF_UP 6-dp round, Spark's
     * NaN-greatest `>= τ`, pairs normalized id_a < id_b (cos is
     * orientation-independent bit-for-bit — IEEE multiply commutes). */
-  private def driverPairScan(rows: Array[(Long, Array[Double], Double)],
-                             tau: Double): Array[(Long, Long, Double)] = {
-    val out = Array.newBuilder[(Long, Long, Double)]
+  private def driverPairScan(in: Array[Row], tau: Double): Seq[Row] = {
+    val rows = scanInput(in)
+    val out = Seq.newBuilder[Row]
     var i = 0
     while (i < rows.length) {
       val (ia, va, na2) = rows(i)
@@ -97,16 +95,13 @@ object Similarity {
       while (j < rows.length) {
         val (ib, vb, nb2) = rows(j)
         if (ia != ib) {
-          val m = math.min(va.length, vb.length)
-          var dot = 0.0; var t = 0
-          while (t < m) { dot += va(t) * vb(t); t += 1 }
-          val c = dot / (na2 * nb2)
+          val c = SparkSemantics.dot(va, vb) / (na2 * nb2)
           // prefilter before the (BigDecimal) round: rounding moves a
           // value by ≤ 5e-7, so only near-threshold pairs pay it
           if (java.lang.Double.isNaN(c) || c >= tau - 1e-6) {
-            val rc = round6(c)
+            val rc = SparkSemantics.round(c, 6)
             if (java.lang.Double.isNaN(rc) || rc >= tau) {
-              if (ia < ib) out += ((ia, ib, rc)) else out += ((ib, ia, rc))
+              out += (if (ia < ib) Row(ia, ib, rc) else Row(ib, ia, rc))
             }
           }
         }
@@ -117,32 +112,17 @@ object Similarity {
     out.result()
   }
 
-  private def pairRowsDf(spark: org.apache.spark.sql.SparkSession,
-                         out: Array[(Long, Long, Double)]): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id_a",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("id_b",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("cos",
-        org.apache.spark.sql.types.DoubleType, nullable = false)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        out.toSeq.map { case (a, b, c) => org.apache.spark.sql.Row(a, b, c) },
-        spark.sparkContext.defaultParallelism), schema)
-  }
-
   /** Local replay of the fused all-pairs top-k window: per-node bounded
     * best-k under Spark's nan-safe (cos DESC, nbr ASC) order, rnk 1-based
     * LONG like the distributed form's Exact.lng(row_number). O(n·k)
     * memory — the n²/2 scored pairs are never materialized. */
-  private def driverKnnScan(rows: Array[(Long, Array[Double], Double)],
-                            kNbrs: Int): Array[(Long, Long, Double, Long)] = {
+  private def driverKnnScan(in: Array[Row], kNbrs: Int): Seq[Row] = {
+    val rows = scanInput(in)
     final case class Cand(nbr: Long, cos: Double)
     // worst-first order so the queue head is the eviction candidate
     val worstFirst = new java.util.Comparator[Cand] {
       def compare(a: Cand, b: Cand): Int = {
-        val c = nanSafeCompare(a.cos, b.cos)
+        val c = SparkSemantics.compare(a.cos, b.cos)
         if (c != 0) c else java.lang.Long.compare(b.nbr, a.nbr)
       }
     }
@@ -153,7 +133,7 @@ object Similarity {
       if (q.size < kNbrs) { q.add(Cand(nbr, cos)); () }
       else {
         val w = q.peek()
-        val c = nanSafeCompare(cos, w.cos)
+        val c = SparkSemantics.compare(cos, w.cos)
         if (c > 0 || (c == 0 && nbr < w.nbr)) { q.poll(); q.add(Cand(nbr, cos)); () }
       }
     }
@@ -164,17 +144,14 @@ object Similarity {
       while (j < rows.length) {
         val (ib, vb, nb2) = rows(j)
         if (ia != ib) {
-          val m = math.min(va.length, vb.length)
-          var dot = 0.0; var t = 0
-          while (t < m) { dot += va(t) * vb(t); t += 1 }
-          val rc = round6(dot / (na2 * nb2))
+          val rc = SparkSemantics.round(SparkSemantics.dot(va, vb) / (na2 * nb2), 6)
           offer(ia, ib, rc); offer(ib, ia, rc)
         }
         j += 1
       }
       i += 1
     }
-    val out = Array.newBuilder[(Long, Long, Double, Long)]
+    val out = Seq.newBuilder[Row]
     val it = heaps.entrySet().iterator()
     while (it.hasNext) {
       val en = it.next()
@@ -182,34 +159,16 @@ object Similarity {
       val arr = en.getValue.toArray(new Array[Cand](en.getValue.size))
       java.util.Arrays.sort(arr, new java.util.Comparator[Cand] {
         def compare(a: Cand, b: Cand): Int = {
-          val c = nanSafeCompare(b.cos, a.cos) // cos DESC
+          val c = SparkSemantics.compare(b.cos, a.cos) // cos DESC
           if (c != 0) c else java.lang.Long.compare(a.nbr, b.nbr)
         }
       })
       var r = 0
       while (r < arr.length) {
-        out += ((node, arr(r).nbr, arr(r).cos, (r + 1).toLong)); r += 1
+        out += Row(node, arr(r).nbr, arr(r).cos, (r + 1).toLong); r += 1
       }
     }
     out.result()
-  }
-
-  private def knnRowsDf(spark: org.apache.spark.sql.SparkSession,
-                        out: Array[(Long, Long, Double, Long)]): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("nbr",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("cos",
-        org.apache.spark.sql.types.DoubleType, nullable = false),
-      org.apache.spark.sql.types.StructField("rnk",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        out.toSeq.map { case (n2, b2, c2, r2) =>
-          org.apache.spark.sql.Row(n2, b2, c2, r2) },
-        spark.sparkContext.defaultParallelism), schema)
   }
 
   /** Corpus with double vectors and precomputed norms. */
@@ -532,16 +491,10 @@ object Similarity {
                         maxSample: Long = 1L << 20,
                         driverMaxValues: Long = DriverKmeansMaxValues): Array[Array[Double]] = {
     import org.apache.spark.sql.types.DecimalType
-    // SIZE ROUTE (the DriverCcMaxEdges idiom): a sample that fits the
-    // driver replays the SAME Lloyd rounds locally with bit-identical
-    // arithmetic — exact scaled-18 HALF_UP decimal means, the identical
-    // fused cosine fold and lowest-cid argmax ties — in 3 bounded Spark
-    // jobs (dim probe, row-count probe, collect) instead of ~3 jobs per
-    // round (r14 profile: the 4-round distributed fit cost ~1s of
-    // serialized single-task stages per ANN-family query at sf0.1).
-    // Both routes emit the same codebook (the DuckDB kmeans replay and
-    // KmeansRouteSpec pin it); past the gate the distributed loop ships
-    // unchanged.
+    // driver route (see LocalRoute): 3 bounded Spark jobs (dim probe,
+    // row-count probe, collect) instead of ~3 jobs per Lloyd round (r14
+    // profile: the 4-round distributed fit cost ~1s of serialized
+    // single-task stages per ANN-family query at sf0.1)
     driverSampleRows(kmeansSample(vecs, maxSample), k, driverMaxValues) match {
       case Some(rows) if rows.nonEmpty =>
         return driverLloyd(rows, k, iters)
@@ -598,10 +551,8 @@ object Similarity {
     * distributed path. */
   val DriverKmeansMaxValues: Long = 1L << 21
 
-  /** The routing probe: (id, v, xxhash64(id, 7)) rows of `sample` when
-    * rows × dim fits `maxValues` — one dim probe (head), one bounded
-    * limit-count (executor-side, nothing driver-sized materializes on
-    * the over-gate path — the probeRows rule), then the collect. None
+  /** The (id, v, xxhash64(id, 7)) rows of `sample` when rows × dim fits
+    * `maxValues`: one dim probe (head), then [[LocalRoute.rows]]. None
     * when over the gate; Some(empty) propagates an empty sample so the
     * caller can apply its fallback. */
   private def driverSampleRows(sample: DataFrame, k: Int, maxValues: Long)
@@ -610,9 +561,8 @@ object Similarity {
     val dimRow = p.select(size(col("v")).as("d")).head(1)
     if (dimRow.isEmpty) return Some(Array.empty)
     val dim = math.max(1, dimRow(0).getInt(0))
-    val gate = math.max(k.toLong, maxValues / dim).min(Int.MaxValue - 2L).toInt
-    if (p.limit(gate + 1).count() > gate) None
-    else Some(p.collect().map(r =>
+    LocalRoute.rows(p, math.max(k.toLong, maxValues / dim), "fitKmeansCodebook",
+        valuesPerRow = dim).map(_.map(r =>
       (r.getLong(0), r.getSeq[Double](1).toArray, r.getLong(2))))
   }
 
@@ -636,15 +586,6 @@ object Similarity {
     val sorted = rows.sortBy { case (id, _, hk) => (hk, id) }
     var cents: Array[Array[Double]] = sorted.take(k).map(_._2)
     require(cents.nonEmpty, "fitKmeansCodebook: empty input corpus")
-    def cos(x: Array[Double], y: Array[Double]): Double = {
-      val n = math.min(x.length, y.length)
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < n) {
-        val xi = x(i); val yi = y(i)
-        dot += xi * yi; na += xi * xi; nb += yi * yi; i += 1
-      }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
     def scaled18(x: Double): BigInt = BigInt(
       java.math.BigDecimal.valueOf(x)
         .setScale(18, java.math.RoundingMode.HALF_UP).unscaledValue())
@@ -658,9 +599,9 @@ object Similarity {
       val sums = Array.fill(cents.length)(new Array[BigInt](dimMax))
       val cnts = Array.fill(cents.length)(new Array[Long](dimMax))
       rows.foreach { case (_, v, _) =>
-        var best = 0; var bestC = cos(v, cents(0)); var c = 1
+        var best = 0; var bestC = SparkSemantics.cosine(v, cents(0)); var c = 1
         while (c < cents.length) {
-          val cc = cos(v, cents(c))
+          val cc = SparkSemantics.cosine(v, cents(c))
           if (java.lang.Double.compare(cc, bestC) > 0) { best = c; bestC = cc }
           c += 1
         }
@@ -983,16 +924,14 @@ object Similarity {
     val (scored, stats) =
       if (routeStats.degenerate) {
         requireFusedScanAllowed(n, maxFusedRows, "cosineNearDupPairs")
-        // DRIVER ROUTE (r15, the nnDescentGraph idiom): under the ops
-        // gate the n²/2 scan is driver-sized — replay it locally (same
-        // dot fold, same HALF_UP 6-dp round, Spark's NaN-greatest >= τ)
-        // instead of paying the checkpoint + self-join + filter jobs.
+        // driver route (see LocalRoute), gated on the scan's work:
+        // the replay skips the checkpoint + self-join + filter jobs.
         // Ordered AFTER the fused-scan guard: the ceiling's loud-fail
         // contract prices the quadratic arm wherever it runs.
-        if (e.schema("id").dataType == org.apache.spark.sql.types.LongType &&
-            n > 0 && pairScanOps(n, dimMax) <= driverMaxOps) {
-          val out = driverPairScan(collectPairRows(e), tau)
-          return (pairRowsDf(emb.sparkSession, out), routeStats)
+        if (LocalRoute.admit("cosineNearDupPairs", "ops", pairScanOps(n, dimMax), driverMaxOps,
+            eligible = n > 0 && e.schema("id").dataType == LongType)) {
+          val out = driverPairScan(e.select(col("id"), col("v"), col("nrm")).collect(), tau)
+          return (LocalRoute.relation(emb.sparkSession, out, PairSchema), routeStats)
         }
         // checkpoint: both self-join sides read the scan+norm projection
         // from memory instead of recomputing it (bounded by the guard
@@ -1105,14 +1044,12 @@ object Similarity {
       val routeStats = routeKnnSample(us, n, kNbrs)
       if (routeStats.degenerate) {
         requireFusedScanAllowed(n, maxFusedRows, "exactKnnEdgesRouted")
-        // DRIVER ROUTE (r15, after the guard — see cosineNearDupPairs):
-        // under the ops gate the all-pairs top-k replays locally with
-        // O(n·k) memory (bounded per-node heaps), same rounded-cos
-        // nan-safe (cos DESC, nbr ASC) ranking
-        if (e.schema("id").dataType == org.apache.spark.sql.types.LongType &&
-            n > 0 && pairScanOps(n, dimMax) <= driverMaxOps) {
-          return (knnRowsDf(emb.sparkSession, driverKnnScan(collectPairRows(e), kNbrs)),
-            routeStats)
+        // driver route (after the guard — see cosineNearDupPairs): the
+        // all-pairs top-k replays with O(n·k) memory (per-node heaps)
+        if (LocalRoute.admit("exactKnnEdgesRouted", "ops", pairScanOps(n, dimMax), driverMaxOps,
+            eligible = n > 0 && e.schema("id").dataType == LongType)) {
+          val out = driverKnnScan(e.select(col("id"), col("v"), col("nrm")).collect(), kNbrs)
+          return (LocalRoute.relation(emb.sparkSession, out, KnnSchema), routeStats)
         }
         // fused all-pairs window baseline: same output, no reproduced
         // cross product through a shuffle, no quantizer fit, no corpus

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.functions.VectorFunctions
+import graft.functions.{SparkSemantics, VectorFunctions}
 import graft.functions.Exact._
 import graft.ops.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -382,9 +382,9 @@ object AnnIndex {
     val rowsPerProbe = probedRows.toDouble / math.max(1L, nP)
     val ideal = nProbe.toDouble * n.toDouble / math.max(1L, k)
     import spark.implicits._
-    Seq((nP, math.rint(recall * 1e6) / 1e6,
-      math.rint(rowsPerProbe * 100) / 100,
-      math.rint(rowsPerProbe / math.max(ideal, 1e-9) * 1e6) / 1e6))
+    Seq((nP, SparkSemantics.round(recall, 6),
+      SparkSemantics.round(rowsPerProbe, 2),
+      SparkSemantics.round(rowsPerProbe / math.max(ideal, 1e-9), 6)))
       .toDF("n_probes", "recall_at_k", "rows_per_probe", "probe_inflation")
   }
 
