@@ -1,27 +1,56 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-round benchmark: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and emits one JSON line of per-query seconds.
   * A short warmup (table scans + one tiny aggregate) pays the JVM/codegen
   * and parquet-footer costs once so per-query numbers measure the plans,
-  * not first-touch effects. */
+  * not first-touch effects. The helpers below are shared with the other
+  * dev mains (QBench, PlanDump, ProfileRun). */
 object Bench {
+  type Fn = (SparkSession, String) => DataFrame
+
+  /** A query by name; "prod/<name>" resolves the production twin from
+    * Production.forms. */
+  def fnOf(name: String): Fn =
+    if (name.startsWith("prod/")) Production.forms(name.stripPrefix("prod/"))
+    else SparkEntry.queries(name)
+
+  /** Touch every table once (JVM, codegen and parquet-footer costs). */
+  def warmTables(spark: SparkSession, sfDir: String): Unit =
+    graft.sources.Tables.names.foreach { n =>
+      try graft.sources.Tables.tableNormalized(spark, sfDir, n).count()
+      catch { case _: Throwable => () }
+    }
+
+  /** Drop every cached plan and persisted RDD, so the next query is
+    * measured from a clean slate: iterative operators leave
+    * localCheckpoint RDD blocks behind (freed only on driver GC via the
+    * ContextCleaner); letting them accumulate across 100+ queries
+    * evicts/THRASHes later queries' storage and poisons their timings.
+    * EXEMPT the FrozenSides serving generations (r14): stripping a live
+    * generation's blocks while its identity stays valid forces every
+    * later sample through a lost-block failure + evict + re-read — a
+    * measurement artifact no production serving loop pays. */
+  def sweep(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    val protectedIds = graft.streaming.FrozenSides.ownedRddIds
+    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!protectedIds.contains(id)) rdd.unpersist(blocking = false)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.builder("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // warmup: touch every table, run one shuffle+codegen pipeline
-    graft.sources.Tables.names.foreach { n =>
-      try graft.sources.Tables.tableNormalized(spark, sfDir, n).count()
-      catch { case _: Throwable => () }
-    }
+    warmTables(spark, sfDir)
     try SparkEntry.queries("q1_pricing_summary")(spark, sfDir).count()
     catch { case _: Throwable => () }
 
-    type Fn = (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame
     // per-query executor CPU (VERDICT r14 #7): the bench inputs are
     // single-row-group parquet, so scan-fused stages run single-threaded
     // and CPU savings are invisible in wall clock — record task CPU per
@@ -48,19 +77,7 @@ object Bench {
       org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
       val cpu = (cpuNs.get - c0) / 1e9
       val routes = graft.operators.LocalRoute.drain()
-      // measure every query from a clean slate: iterative operators leave
-      // localCheckpoint RDD blocks behind (freed only on driver GC via the
-      // ContextCleaner); letting them accumulate across 100+ queries
-      // evicts/THRASHes later queries' storage and poisons their timings.
-      // EXEMPT the FrozenSides serving generations (r14): stripping a live
-      // generation's blocks while its identity stays valid forces every
-      // later sample through a lost-block failure + evict + re-read — a
-      // measurement artifact no production serving loop pays.
-      spark.sharedState.cacheManager.clearCache()
-      val protectedIds = graft.streaming.FrozenSides.ownedRddIds
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!protectedIds.contains(id)) rdd.unpersist(blocking = false)
-      }
+      sweep(spark)
       Sample(secs, ok, cpu, routes)
     }
     // This machine is shared, and contention windows are SUSTAINED (r10:

@@ -16,13 +16,10 @@ object PlanDump {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val spark = GraftSession.builder("graft-plandump").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    def fnOf(n: String) =
-      if (n.startsWith("prod/")) Production.forms(n.stripPrefix("prod/"))
-      else SparkEntry.queries(n)
     names.foreach { name =>
       val file = s"$outDir/${name.replace("/", "_")}_$suffix.txt"
       try {
-        val df = fnOf(name)(spark, sfDir)
+        val df = Bench.fnOf(name)(spark, sfDir)
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.write(java.nio.file.Paths.get(file),

@@ -17,21 +17,11 @@ object ProfileRun {
     val warm = args.contains("warm")
     val spark = GraftSession.builder("graft-profile").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.sources.Tables.names.foreach { n =>
-      try graft.sources.Tables.tableNormalized(spark, sfDir, n).count()
-      catch { case _: Throwable => () }
-    }
-    def fnOf(n: String) =
-      if (n.startsWith("prod/")) Production.forms(n.stripPrefix("prod/"))
-      else SparkEntry.queries(n)
-    val fn = fnOf(name)
+    Bench.warmTables(spark, sfDir)
+    val fn = Bench.fnOf(name)
     if (warm) {
       try fn(spark, sfDir).count() catch { case _: Throwable => () }
-      spark.sharedState.cacheManager.clearCache()
-      val protectedIds = graft.streaming.FrozenSides.ownedRddIds
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!protectedIds.contains(id)) rdd.unpersist(blocking = false)
-      }
+      Bench.sweep(spark)
     }
     final case class St(var name: String = "", var submitted: Long = 0L,
                         var completed: Long = 0L, var taskMs: Long = 0L,

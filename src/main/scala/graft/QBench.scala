@@ -11,32 +11,17 @@ object QBench {
     val sfDir = args.head
     val spark = GraftSession.builder("graft-qbench").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.sources.Tables.names.foreach { n =>
-      try graft.sources.Tables.tableNormalized(spark, sfDir, n).count()
-      catch { case _: Throwable => () }
-    }
+    Bench.warmTables(spark, sfDir)
     val names = args.tail.toSeq
-    // "prod/<name>" resolves the production twin from Production.forms
-    def fnOf(n: String) =
-      if (n.startsWith("prod/")) Production.forms(n.stripPrefix("prod/"))
-      else SparkEntry.queries(n)
     // warmup pass (JIT + codegen + page cache), then 3 measured passes
-    names.foreach { n => try fnOf(n)(spark, sfDir).count() catch { case _: Throwable => () } }
-    def sweep(): Unit = {
-      // FrozenSides serving generations are exempt (see Bench.runOne)
-      spark.sharedState.cacheManager.clearCache()
-      val protectedIds = graft.streaming.FrozenSides.ownedRddIds
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!protectedIds.contains(id)) rdd.unpersist(blocking = false)
-      }
-    }
-    sweep()
+    names.foreach { n => try Bench.fnOf(n)(spark, sfDir).count() catch { case _: Throwable => () } }
+    Bench.sweep(spark)
     val samples = (1 to 3).flatMap { round =>
       names.map { name =>
         val t0 = System.nanoTime()
-        fnOf(name)(spark, sfDir).count()
+        Bench.fnOf(name)(spark, sfDir).count()
         val s = (System.nanoTime() - t0) / 1e9
-        sweep()
+        Bench.sweep(spark)
         (name, s)
       }
     }

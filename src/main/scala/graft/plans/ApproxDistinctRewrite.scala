@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, HyperLogLogPlusPlus}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -40,14 +39,6 @@ object ApproxDistinctRewrite extends Rule[LogicalPlan] {
               aggregateFunction = HyperLogLogPlusPlus(c.children.head, rsd),
               isDistinct = false)
         }
-    }
-  }
-
-  /** Install on a live session (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(ApproxDistinctRewrite)) {
-      spark.experimental.extraOptimizations = cur :+ ApproxDistinctRewrite
     }
   }
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, ApproximatePercentile, Percentile}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
@@ -49,14 +48,6 @@ object ApproxPercentileRewrite extends Rule[LogicalPlan] {
             Cast(ae.copy(aggregateFunction = approx), ae.dataType,
               Some(conf.sessionLocalTimeZone))
         }
-    }
-  }
-
-  /** Install on a live session (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(ApproxPercentileRewrite)) {
-      spark.experimental.extraOptimizations = cur :+ ApproxPercentileRewrite
     }
   }
 }

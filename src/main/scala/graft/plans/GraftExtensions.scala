@@ -32,10 +32,4 @@ object GraftExtensions {
     (FunctionIdentifier("dot_product"),
       new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
       (children: Seq[Expression]) => DotProduct(children(0), children(1))))
-
-  /** Register on a live session (tests, notebooks). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    functions.foreach { case (id, info, b) =>
-      org.apache.spark.sql.GraftShims.registerFunction(spark, id, info, b)
-    }
 }

@@ -38,8 +38,9 @@ import org.apache.spark.sql.types.DataType
   * explicit: register() (re)builds the MV; pair with sink_incr_agg for
   * delta maintenance.
   *
-  * Gated on spark.graft.mvRewrite.enabled (default true once installed —
-  * the rewrite is exact; flip off to A/B the plans).
+  * Gated on spark.graft.mvRewrite.enabled (default true wherever
+  * GraftExtensions is loaded — the rewrite is exact; flip off to A/B the
+  * plans).
   */
 object MvRewrite extends Rule[LogicalPlan] {
 
@@ -155,13 +156,5 @@ object MvRewrite extends Rule[LogicalPlan] {
       }, p)
     }
     Some(Aggregate(newGrouping, newAggExprs, newChild))
-  }
-
-  /** Install on a live session (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(MvRewrite)) {
-      spark.experimental.extraOptimizations = cur :+ MvRewrite
-    }
   }
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan, Project}
@@ -102,14 +101,6 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
               Join(newLeft, newRight, Inner, Some(newCond), hint))
           case _ => j
         }
-    }
-  }
-
-  /** Install on a live session (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(RangeJoinRewrite)) {
-      spark.experimental.extraOptimizations = cur :+ RangeJoinRewrite
     }
   }
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -101,19 +101,10 @@ object TopKStrategy extends SparkStrategy {
 
 /** Public API. */
 object TopK {
-  /** Ensure the strategy is installed on this session (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies = cur :+ TopKStrategy
-    }
-  }
-
-  /** Top-k rows per key group under a total ordering.
+  /** Top-k rows per key group under a total ordering. Planned by
+    * `TopKStrategy`, which `GraftExtensions` injects into the session.
     * @param orderBy must include a tie-break for deterministic output */
   def perKey(df: DataFrame, keyCols: Seq[Column], orderBy: Seq[Column], k: Int): DataFrame = {
-    val spark = df.sparkSession
-    install(spark)
     val keys = keyCols.map(GraftShims.toCatalyst)
     val order = orderBy.map { c =>
       GraftShims.toCatalyst(c) match {
@@ -121,6 +112,6 @@ object TopK {
         case e => SortOrder(e, org.apache.spark.sql.catalyst.expressions.Ascending)
       }
     }
-    GraftShims.ofRows(spark, TopKPerKey(keys, order, k, GraftShims.plan(df)))
+    GraftShims.ofRows(df.sparkSession, TopKPerKey(keys, order, k, GraftShims.plan(df)))
   }
 }

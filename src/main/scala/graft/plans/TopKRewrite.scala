@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -60,14 +59,5 @@ object TopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
         pk.zip(parts).forall { case (x, y) => x.semanticEquals(y) } &&
         po.zip(order).forall { case (x, y) => x.semanticEquals(y) }
     case _ => false
-  }
-
-  /** Install rule + strategy on a live session (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    TopK.install(spark)
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(TopKRewrite)) {
-      spark.experimental.extraOptimizations = cur :+ TopKRewrite
-    }
   }
 }

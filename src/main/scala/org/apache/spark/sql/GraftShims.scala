@@ -24,14 +24,4 @@ object GraftShims {
   /** The analyzed logical plan under a DataFrame. */
   def plan(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].logicalPlan
-
-  /** Register a function on an already-running session (the conf-based
-    * `spark.sql.extensions` path only applies to fresh contexts). */
-  def registerFunction(
-      spark: SparkSession,
-      id: org.apache.spark.sql.catalyst.FunctionIdentifier,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-      .registerFunction(id, info, builder)
 }

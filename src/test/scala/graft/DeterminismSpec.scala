@@ -17,11 +17,10 @@ class DeterminismSpec extends SparkSpec {
 
   SparkEntry.allQ.foreach { q =>
     test(s"${q.name} is identical under 3-way and 13-way shuffles") {
-      def run(parts: Int): Seq[String] = {
-        spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-        try q.fn(spark, TinyDir).collect().map(_.toString).sorted.toSeq
-        finally spark.conf.set("spark.sql.shuffle.partitions", "4")
-      }
+      def run(parts: Int): Seq[String] =
+        withConf("spark.sql.shuffle.partitions" -> parts.toString) {
+          q.fn(spark, TinyDir).collect().map(_.toString).sorted.toSeq
+        }
       assert(run(3) == run(13), s"${q.name} output depends on shuffle width")
     }
   }

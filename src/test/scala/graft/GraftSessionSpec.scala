@@ -2,8 +2,13 @@ package graft
 
 /** The cluster posture map: values well-formed, and every SQL-dynamic
   * conf is acceptable to a live session (a typo'd key or value would
-  * only surface at deploy time otherwise). */
+  * only surface at deploy time otherwise). The test session itself is
+  * the shipped one. */
 class GraftSessionSpec extends SparkSpec {
+
+  test("the test session is GraftSession's, with GraftExtensions loaded") {
+    assert(spark.conf.get("spark.sql.extensions") == "graft.plans.GraftExtensions")
+  }
 
   test("clusterConf: well-formed, SQL-dynamic keys settable on a live session") {
     val conf = GraftSession.clusterConf(totalCores = 8000, checkpointDir = "/ckpt")
@@ -13,13 +18,7 @@ class GraftSessionSpec extends SparkSpec {
     val dynamic = Seq("spark.sql.shuffle.partitions",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes",
       "spark.sql.files.maxPartitionBytes")
-    dynamic.foreach { k =>
-      val prev = spark.conf.getOption(k)
-      try spark.conf.set(k, conf(k)) // throws on an invalid key/value
-      finally prev match {
-        case Some(v) => spark.conf.set(k, v)
-        case None => spark.conf.unset(k)
-      }
-    }
+    // withConf's set throws on an invalid key/value
+    dynamic.foreach(k => withConf(k -> conf(k))(()))
   }
 }

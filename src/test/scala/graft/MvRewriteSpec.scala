@@ -16,7 +16,6 @@ class MvRewriteSpec extends SparkSpec with BeforeAndAfterAll {
   private lazy val mvPath = Files.createTempDirectory("mv").toString + "/li_mv"
 
   private def setup(): Unit = {
-    MvRewrite.install(spark)
     MvRewrite.register(spark, "li_rollup", basePath,
       keys = Seq("l_returnflag", "l_linestatus"),
       measures = Seq("l_quantity", "l_extendedprice"),
@@ -42,11 +41,11 @@ class MvRewriteSpec extends SparkSpec with BeforeAndAfterAll {
     assert(!planStr.contains("lineitem.parquet"), planStr)
     val gotMv = withMv.collect()
 
-    spark.conf.set(MvRewrite.EnabledKey, "false")
-    val base = q()
-    assert(!base.queryExecution.executedPlan.toString.contains("li_mv"))
-    val gotBase = base.collect()
-    spark.conf.set(MvRewrite.EnabledKey, "true")
+    val gotBase = withConf(MvRewrite.EnabledKey -> "false") {
+      val base = q()
+      assert(!base.queryExecution.executedPlan.toString.contains("li_mv"))
+      base.collect()
+    }
 
     assert(gotMv.map(_.toString).toSeq == gotBase.map(_.toString).toSeq)
     assert(gotMv.nonEmpty)
@@ -60,12 +59,12 @@ class MvRewriteSpec extends SparkSpec with BeforeAndAfterAll {
       .orderBy("l_linestatus")
     assert(withMv.queryExecution.executedPlan.toString.contains("li_mv"))
     val gotMv = withMv.collect()
-    spark.conf.set(MvRewrite.EnabledKey, "false")
-    val gotBase = spark.read.parquet(basePath)
-      .filter(col("l_returnflag") === "R")
-      .groupBy("l_linestatus").agg(sum("l_extendedprice").as("s"))
-      .orderBy("l_linestatus").collect()
-    spark.conf.set(MvRewrite.EnabledKey, "true")
+    val gotBase = withConf(MvRewrite.EnabledKey -> "false") {
+      spark.read.parquet(basePath)
+        .filter(col("l_returnflag") === "R")
+        .groupBy("l_linestatus").agg(sum("l_extendedprice").as("s"))
+        .orderBy("l_linestatus").collect()
+    }
     assert(gotMv.map(_.toString).toSeq == gotBase.map(_.toString).toSeq)
   }
 
@@ -104,15 +103,13 @@ class MvRewriteSpec extends SparkSpec with BeforeAndAfterAll {
     val planStr = joined.queryExecution.executedPlan.toString
     assert(planStr.contains("li_mv"))
     val got = joined.collect()
-    spark.conf.set(MvRewrite.EnabledKey, "false")
-    val exp = {
+    val exp = withConf(MvRewrite.EnabledKey -> "false") {
       val a2 = spark.read.parquet(basePath)
         .groupBy("l_returnflag").agg(sum("l_quantity").as("s"))
       val b2 = spark.read.parquet(basePath)
         .groupBy("l_returnflag").agg(count(lit(1)).as("n"))
       a2.join(b2, "l_returnflag").orderBy("l_returnflag").collect()
     }
-    spark.conf.set(MvRewrite.EnabledKey, "true")
     assert(got.map(_.toString).toSeq == exp.map(_.toString).toSeq)
   }
 }

@@ -69,7 +69,6 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("bm25: global top-20 runs through the TopKPerKey heap-prune, not a full sort") {
-    graft.plans.TopKRewrite.install(spark) // GraftSession installs this; the bare test session doesn't
     val plan = executed(ops.Retrieval.qBm25)
     assert(plan.contains("TopKPerKey"), plan)
   }

@@ -53,11 +53,10 @@ class PqSpec extends SparkSpec {
 
   test("q_ann_pq is bit-identical under 3-way and 13-way shuffles") {
     val fn = SparkEntry.queries("q_ann_pq")
-    def run(parts: Int): Seq[String] = {
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      try fn(spark, TinyDir).collect().map(_.toString).toSeq
-      finally spark.conf.set("spark.sql.shuffle.partitions", "4")
-    }
+    def run(parts: Int): Seq[String] =
+      withConf("spark.sql.shuffle.partitions" -> parts.toString) {
+        fn(spark, TinyDir).collect().map(_.toString).toSeq
+      }
     assert(run(3) == run(13), "q_ann_pq output depends on shuffle width")
   }
 }

@@ -15,9 +15,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
   }
 
   test("naive range join rewrites to a bucket hash join with identical results") {
-    RangeJoinRewrite.install(spark)
-    spark.conf.set(RangeJoinRewrite.WidthKey, "50000")
-    try {
+    withConf(RangeJoinRewrite.WidthKey -> "50000") {
       val df = naiveRangeJoin()
       val physical = df.queryExecution.executedPlan.toString
       assert(physical.contains("__graft_bucket"), s"rewrite did not fire:\n$physical")
@@ -25,36 +23,30 @@ class RangeJoinRewriteSpec extends SparkSpec {
         s"still nested-loop:\n$physical")
       val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-      spark.conf.set(RangeJoinRewrite.EnabledKey, "false")
-      val want = naiveRangeJoin().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val want = withConf(RangeJoinRewrite.EnabledKey -> "false") {
+        naiveRangeJoin().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
       assert(got === want)
-    } finally {
-      spark.conf.set(RangeJoinRewrite.EnabledKey, "true")
-      spark.conf.unset(RangeJoinRewrite.WidthKey)
     }
   }
 
   test("rewrite leaves equi-joins and non-range joins alone") {
-    RangeJoinRewrite.install(spark)
-    spark.conf.set(RangeJoinRewrite.WidthKey, "50000")
-    try {
+    withConf(RangeJoinRewrite.WidthKey -> "50000") {
       val c = graft.sources.Tables.customer(spark, TinyDir)
       val o = graft.sources.Tables.orders(spark, TinyDir)
       val eq = o.join(c, col("o_custkey") === col("c_custkey"))
       assert(!eq.queryExecution.executedPlan.toString.contains("__graft_bucket"))
-    } finally spark.conf.unset(RangeJoinRewrite.WidthKey)
+    }
   }
 
   test("degenerate interval (hi <= lo) yields no matches, no crash") {
     import spark.implicits._
-    RangeJoinRewrite.install(spark)
-    spark.conf.set(RangeJoinRewrite.WidthKey, "10")
-    try {
+    withConf(RangeJoinRewrite.WidthKey -> "10") {
       val probes = Seq((1L, 5.0), (2L, 25.0)).toDF("id", "x")
       val bands = Seq((0L, 30.0, 30.0), (1L, 20.0, 30.0)).toDF("band", "lo", "hi")
       val got = probes.join(bands, col("x") >= col("lo") && col("x") < col("hi"))
         .select("id", "band").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === Set((2L, 1L)))
-    } finally spark.conf.unset(RangeJoinRewrite.WidthKey)
+    }
   }
 }

@@ -172,7 +172,6 @@ class Round3OpsSpec extends SparkSpec {
     import spark.implicits._
     val df = (1 to 1000).map(i => (i.toLong, (i * 37 % 101).toLong)).toDF("id", "v")
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("v").desc, col("id"))
-    graft.plans.TopKRewrite.install(spark)
     val got = df.withColumn("rn", row_number().over(w)).filter(col("rn") <= 7)
       .select("id", "v").collect().map(r => (r.getLong(0), r.getLong(1)))
     val expect = df.orderBy(col("v").desc, col("id")).limit(7)
@@ -182,13 +181,11 @@ class Round3OpsSpec extends SparkSpec {
 
   test("approx-distinct rewrite: off by default (exact), on → HLL within rsd, filters untouched") {
     import spark.implicits._
-    graft.plans.ApproxDistinctRewrite.install(spark)
     val df = (1 to 20000).map(i => (i % 7, (i % 997).toLong)).toDF("g", "x")
     df.createOrReplaceTempView("adr_t")
     val exact = spark.sql("SELECT g, COUNT(DISTINCT x) AS d FROM adr_t GROUP BY g ORDER BY g")
       .collect().map(r => (r.getInt(0), r.getLong(1)))
-    try {
-      spark.conf.set("spark.graft.approxDistinct.enabled", "true")
+    withConf("spark.graft.approxDistinct.enabled" -> "true") {
       val approx = spark.sql("SELECT g, COUNT(DISTINCT x) AS d FROM adr_t GROUP BY g ORDER BY g")
       assert(approx.queryExecution.optimizedPlan.toString.contains("approx_count_distinct"))
       val got = approx.collect().map(r => (r.getInt(0), r.getLong(1)))
@@ -200,7 +197,7 @@ class Round3OpsSpec extends SparkSpec {
       val filtered = spark.sql(
         "SELECT COUNT(DISTINCT x) FILTER (WHERE x < 100) FROM adr_t")
       assert(!filtered.queryExecution.optimizedPlan.toString.contains("approx_count_distinct"))
-    } finally spark.conf.set("spark.graft.approxDistinct.enabled", "false")
+    }
     val off = spark.sql("SELECT g, COUNT(DISTINCT x) AS d FROM adr_t GROUP BY g ORDER BY g")
       .collect().map(r => (r.getInt(0), r.getLong(1)))
     assert(off.sameElements(exact))

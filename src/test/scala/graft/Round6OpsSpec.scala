@@ -55,13 +55,11 @@ class Round6OpsSpec extends SparkSpec {
     val df = () => spark.read.parquet(s"$TinyDir/lineitem.parquet")
       .groupBy("l_returnflag")
       .agg(expr("percentile(l_quantity, 0.5)").as("med"))
-    ApproxPercentileRewrite.install(spark)
     val offPlan = df().queryExecution.optimizedPlan.toString
     assert(offPlan.contains("percentile") && !offPlan.contains("approx"), offPlan)
     val exact = df().collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
 
-    spark.conf.set(ApproxPercentileRewrite.EnabledKey, "true")
-    try {
+    withConf(ApproxPercentileRewrite.EnabledKey -> "true") {
       val onPlan = df().queryExecution.optimizedPlan.toString
       assert(onPlan.contains("percentile_approx") || onPlan.contains("approx_percentile"), onPlan)
       val approx = df().collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
@@ -75,7 +73,7 @@ class Round6OpsSpec extends SparkSpec {
         .agg(expr("percentile(l_quantity, 0.5, 2)").as("med"))
       val wPlan = weighted.queryExecution.optimizedPlan.toString
       assert(!wPlan.contains("percentile_approx") && !wPlan.contains("approx_percentile"), wPlan)
-    } finally spark.conf.set(ApproxPercentileRewrite.EnabledKey, "false")
+    }
   }
 
   test("streaming as-of join: latest quote at-or-before each event, out-of-order safe") {

@@ -62,9 +62,7 @@ class SaltedSkewSpec extends SparkSpec {
       // force a sort-merge join: broadcast would dodge the skew machinery
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConf(confs: _*) {
       val joined = skewedFact.join(dim, "k")
       // materialize THIS DataFrame (count() would plan a separate query
       // and leave joined's adaptive plan unfinalized)
@@ -72,9 +70,6 @@ class SaltedSkewSpec extends SparkSpec {
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"AQE did not mark the join skewed:\n$plan")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -33,14 +33,12 @@ class ScaleOpsSpec extends SparkSpec {
     Buckets.writeBucketed(c, "cust_b", "o_custkey", 8, sortBy = Some("o_custkey"))
     val joined = spark.table("orders_b").join(spark.table("cust_b"), "o_custkey")
     // disable broadcast so the co-located sort-merge path is exercised
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       joined.collect()
       val plan = joined.queryExecution.executedPlan.toString()
       assert(!plan.contains("Exchange hashpartitioning"), s"plan:\n$plan")
       assert(joined.count() == o.join(c, "o_custkey").count())
     } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.sql("DROP TABLE IF EXISTS orders_b")
       spark.sql("DROP TABLE IF EXISTS cust_b")
     }

@@ -220,11 +220,10 @@ class SketchesSpec extends SparkSpec {
   Seq("q_sketch_setops", "q_sketch_quantile", "q_sketch_cms").foreach { name =>
     test(s"$name is bit-identical under 3-way and 13-way shuffles") {
       val fn = SparkEntry.queries(name)
-      def run(parts: Int): Seq[String] = {
-        spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-        try fn(spark, TinyDir).collect().map(_.toString).toSeq
-        finally spark.conf.set("spark.sql.shuffle.partitions", "4")
-      }
+      def run(parts: Int): Seq[String] =
+        withConf("spark.sql.shuffle.partitions" -> parts.toString) {
+          fn(spark, TinyDir).collect().map(_.toString).toSeq
+        }
       assert(run(3) == run(13), s"$name output depends on shuffle width")
     }
   }

@@ -4,18 +4,19 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession fixture; sf0.001 keeps specs fast. */
+/** Shared local SparkSession fixture; sf0.001 keeps specs fast. The
+  * session is the shipped one (`GraftSession.builder`: its confs and
+  * GraftExtensions' rules, strategy and SQL functions), so every spec
+  * tests what Verify and Bench run; only the core count and shuffle
+  * width are test-sized. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val TinyDir = "/root/testdata/sf0.001"
   val SmallDir = "/root/testdata/sf0.01"
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSession.builder(getClass.getSimpleName)
       .master("local[4]")
-      .appName(getClass.getSimpleName)
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     // belt to the test-classpath log4j2.properties' suspenders: the r14
     // driver test run died under INFO spam before the sbt summary printed

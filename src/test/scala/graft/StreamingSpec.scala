@@ -155,35 +155,33 @@ class StreamingSpec extends SparkSpec {
     implicit val sc = spark.sqlContext
     // RocksDB state store — the cluster posture GraftSession.withRocksDbState
     // applies; set on the session so this streaming query picks it up
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val df = mem.toDF().toDF("event_id", "event_type", "ts")
-    val q = StreamingOps.dedupEventsWithinWatermark(df, "1 hour")
-      .writeStream.format("memory").queryName("dedup_wm").outputMode("append").start()
-    try {
-      mem.addData(
-        (1L, "click", ts("2024-01-01 10:00:00")),
-        (1L, "click", ts("2024-01-01 10:05:00")), // replay inside horizon
-        (2L, "view", ts("2024-01-01 10:10:00")))
-      q.processAllAvailable()
-      // replay id 1 again within the watermark window -> still dropped
-      mem.addData((1L, "click", ts("2024-01-01 10:20:00")))
-      q.processAllAvailable()
-      // push the watermark far past id 1's horizon; its state is evicted
-      mem.addData((3L, "view", ts("2024-01-01 20:00:00")))
-      q.processAllAvailable()
-      // id 1 reappears AFTER eviction: a fresh row (bounded state means
-      // dedup guarantees hold only within the replay horizon — by design)
-      mem.addData((1L, "click", ts("2024-01-01 19:30:00")))
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT event_id FROM dedup_wm").collect().map(_.getLong(0))
-      assert(rows.count(_ == 1L) == 2, s"rows=${rows.toSeq}")
-      assert(rows.count(_ == 2L) == 1)
-      assert(rows.count(_ == 3L) == 1)
-    } finally {
-      q.stop()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    withConf("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      val mem = MemoryStream[(Long, String, java.sql.Timestamp)]
+      val df = mem.toDF().toDF("event_id", "event_type", "ts")
+      val q = StreamingOps.dedupEventsWithinWatermark(df, "1 hour")
+        .writeStream.format("memory").queryName("dedup_wm").outputMode("append").start()
+      try {
+        mem.addData(
+          (1L, "click", ts("2024-01-01 10:00:00")),
+          (1L, "click", ts("2024-01-01 10:05:00")), // replay inside horizon
+          (2L, "view", ts("2024-01-01 10:10:00")))
+        q.processAllAvailable()
+        // replay id 1 again within the watermark window -> still dropped
+        mem.addData((1L, "click", ts("2024-01-01 10:20:00")))
+        q.processAllAvailable()
+        // push the watermark far past id 1's horizon; its state is evicted
+        mem.addData((3L, "view", ts("2024-01-01 20:00:00")))
+        q.processAllAvailable()
+        // id 1 reappears AFTER eviction: a fresh row (bounded state means
+        // dedup guarantees hold only within the replay horizon — by design)
+        mem.addData((1L, "click", ts("2024-01-01 19:30:00")))
+        q.processAllAvailable()
+        val rows = spark.sql("SELECT event_id FROM dedup_wm").collect().map(_.getLong(0))
+        assert(rows.count(_ == 1L) == 2, s"rows=${rows.toSeq}")
+        assert(rows.count(_ == 2L) == 1)
+        assert(rows.count(_ == 3L) == 1)
+      } finally q.stop()
     }
   }
 

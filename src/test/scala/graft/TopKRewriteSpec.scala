@@ -15,7 +15,6 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("row_number<=k filter is rewritten to TopKPerKey under the window") {
-    TopKRewrite.install(spark)
     val df = windowTopk(TinyDir)
     val optimized = df.queryExecution.optimizedPlan.toString()
     assert(optimized.contains("TopKPerKey"), s"optimized:\n$optimized")
@@ -24,11 +23,8 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("rewritten plan returns identical rows to the unrewritten plan") {
-    TopKRewrite.install(spark)
-    val expected = {
-      spark.conf.set(TopKRewrite.ConfKey, "false")
-      try windowTopk(SmallDir).collect().map(_.toSeq).toSet
-      finally spark.conf.set(TopKRewrite.ConfKey, "true")
+    val expected = withConf(TopKRewrite.ConfKey -> "false") {
+      windowTopk(SmallDir).collect().map(_.toSeq).toSet
     }
     val got = windowTopk(SmallDir).collect().map(_.toSeq).toSet
     assert(got == expected)
@@ -36,7 +32,6 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("rank() (tie-keeping) is NOT rewritten") {
-    TopKRewrite.install(spark)
     val w = Window.partitionBy("o_custkey").orderBy(col("o_totalprice").desc)
     val df = spark.read.parquet(s"$TinyDir/orders.parquet")
       .withColumn("r", rank().over(w))

@@ -30,7 +30,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("SQL names resolve via GraftExtensions registration") {
-    graft.plans.GraftExtensions.register(spark)
     val r = spark.sql("SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) c, " +
       "dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) d").head()
     assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
