@@ -1,13 +1,25 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Paths}
+import scala.util.{Failure, Success, Try}
 
-/** Per-round benchmark: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and emits one JSON line of per-query seconds.
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
+
+/** graft's measurement entry point. With no arguments, the per-round
+  * benchmark: every SparkEntry query and production twin against
+  * SPARK_GRAFT_SF_DIR, one JSON line of per-query seconds on stdout and
+  * each query's wall, CPU, layer columns and routes in bench_full.json.
   * A short warmup (table scans + one tiny aggregate) pays the JVM/codegen
   * and parquet-footer costs once so per-query numbers measure the plans,
-  * not first-touch effects. The helpers below are shared with the other
-  * dev mains (QBench, PlanDump, ProfileRun). */
+  * not first-touch effects. Modes ("prod/<name>" names a production twin):
+  *  - `time <sfDir> <q...>`: a warm-up pass, then three ROUND-ROBIN passes
+  *    (a sustained host contention window poisons back-to-back samples of
+  *    one query); prints rows and min/med/max seconds per query;
+  *  - `plan <sfDir> [<outDir> <suffix>] <q...>`: the formatted physical
+  *    plan before execution, printed or written to `<outDir>/<q>_<suffix>.txt`;
+  *  - `profile <sfDir> <q> [warm]`: one run's per-stage table, the local
+  *    stand-in for the Spark UI's stage page; `warm` runs the query first. */
 object Bench {
   type Fn = (SparkSession, String) => DataFrame
 
@@ -29,6 +41,7 @@ object Bench {
     * localCheckpoint RDD blocks behind (freed only on driver GC via the
     * ContextCleaner); letting them accumulate across 100+ queries
     * evicts/THRASHes later queries' storage and poisons their timings.
+    * Blocking, so block removal never overlaps the next timed region.
     * EXEMPT the FrozenSides serving generations (r14): stripping a live
     * generation's blocks while its identity stays valid forces every
     * later sample through a lost-block failure + evict + re-read — a
@@ -37,15 +50,80 @@ object Bench {
     spark.sharedState.cacheManager.clearCache()
     val protectedIds = graft.streaming.FrozenSides.ownedRddIds
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!protectedIds.contains(id)) rdd.unpersist(blocking = false)
+      if (!protectedIds.contains(id)) rdd.unpersist(blocking = true)
     }
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val mode: SparkSession => Unit = args.toList match {
+      case Nil => full(_, sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+      case "time" :: sfDir :: names if names.nonEmpty => time(_, sfDir, names)
+      case "plan" :: sfDir :: rest if rest.nonEmpty => plan(_, sfDir, rest)
+      case "profile" :: sfDir :: name :: rest => profile(_, sfDir, name, rest.contains("warm"))
+      case _ => throw new IllegalArgumentException("usage: Bench [time|plan|profile] <sfDir> ...")
+    }
     val spark = GraftSession.builder("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    try mode(spark) finally spark.stop()
+  }
 
+  /** [[warmTables]], one untimed run of each query, then [[sweep]]. */
+  private def warmUp(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
+    warmTables(spark, sfDir)
+    names.foreach { n => try fnOf(n)(spark, sfDir).count() catch { case _: Throwable => () } }
+    sweep(spark)
+  }
+
+  private def time(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
+    warmUp(spark, sfDir, names)
+    val samples = for (_ <- 1 to 3; name <- names) yield {
+      val (rows, m) = Measure(spark)(Try(fnOf(name)(spark, sfDir).count()))
+      sweep(spark)
+      (name, rows, m.secs)
+    }
+    names.foreach { name =>
+      val runs = samples.filter(_._1 == name)
+      val ts = runs.map(_._3).sorted
+      runs.map(_._2).find(_.isFailure).getOrElse(runs.head._2) match {
+        case Failure(e) => println(s"TIME $name FAIL ${e.toString.take(600)}")
+        case Success(rows) => println(f"TIME $name rows=$rows min=${ts.head}%.2f " +
+          f"med=${ts(ts.length / 2)}%.2f max=${ts.last}%.2f")
+      }
+    }
+  }
+
+  private def plan(spark: SparkSession, sfDir: String, rest: Seq[String]): Unit = {
+    val isQuery = (n: String) => n.startsWith("prod/") || SparkEntry.queries.contains(n)
+    val (outDir, names) =
+      if (isQuery(rest.head)) (None, rest) else (Some((rest(0), rest(1))), rest.drop(2))
+    outDir.foreach { case (dir, _) => Files.createDirectories(Paths.get(dir)) }
+    names.foreach { name =>
+      try {
+        val txt = fnOf(name)(spark, sfDir).queryExecution.explainString(FormattedMode)
+        outDir match {
+          case Some((dir, suffix)) =>
+            Files.write(Paths.get(s"$dir/${name.replace("/", "_")}_$suffix.txt"), txt.getBytes("UTF-8"))
+            println(s"PLAN_OK $name")
+          case None => println(s"PLAN $name\n$txt")
+        }
+      } catch { case e: Throwable => println(s"PLAN_FAIL $name ${e.toString.take(200)}") }
+    }
+  }
+
+  private def profile(spark: SparkSession, sfDir: String, name: String, warm: Boolean): Unit = {
+    warmUp(spark, sfDir, if (warm) Seq(name) else Nil)
+    val (rows, m) = Measure(spark)(fnOf(name)(spark, sfDir).count())
+    println(f"PROFILE $name rows=$rows total=${m.secs}%.2fs jobs=${m.jobs} stages=${m.stages.size}")
+    def mb(b: Long) = b / 1048576.0
+    m.stages.sortBy(-_.wallSec).take(40).foreach { s =>
+      println(f"STAGE ${s.id}%5d wall=${s.wallSec}%6.2fs task=${s.taskSec}%7.2fs " +
+        f"tasks=${s.tasks}%3d in=${mb(s.inputBytes)}%7.1fMB " +
+        f"sr=${mb(s.shuffleReadBytes)}%7.1fMB sw=${mb(s.shuffleWriteBytes)}%7.1fMB  ${s.name.take(110)}")
+    }
+    println(f"PROFILE_SUM stage_wall=${m.stages.map(_.wallSec).sum}%.2fs (overlaps possible)")
+  }
+
+  private def full(spark: SparkSession, sfDir: String): Unit = {
     // warmup: touch every table, run one shuffle+codegen pipeline
     warmTables(spark, sfDir)
     try SparkEntry.queries("q1_pricing_summary")(spark, sfDir).count()
@@ -54,31 +132,27 @@ object Bench {
     // per-query executor CPU (VERDICT r14 #7): the bench inputs are
     // single-row-group parquet, so scan-fused stages run single-threaded
     // and CPU savings are invisible in wall clock — record task CPU per
-    // query into the bench_full.json artifact. The counter is read only
-    // after a listener-bus drain, OUTSIDE the timed region.
+    // query into the bench_full.json artifact, with the query's layer
+    // columns: `build_sec` (fn returning, before the count), jobs,
+    // stages, tasks, task time, input and shuffle bytes. Measure reads
+    // them after a listener-bus drain, OUTSIDE the timed region.
     // The query's driver-route decisions (operators.LocalRoute) ride
-    // along, drained outside the timed region like the CPU counter.
-    final case class Sample(secs: Double, ok: Boolean, cpu: Double,
-                            routes: Seq[graft.operators.LocalRoute.Record])
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) { cpuNs.addAndGet(m.executorCpuTime); () }
-      }
-    })
-    def runOne(fn: Fn): Sample = {
-      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-      val c0 = cpuNs.get
+    // along, drained outside the timed region too.
+    final case class Run(ok: Boolean, buildSec: Double, m: Measure.Sample,
+                         routes: Seq[graft.operators.LocalRoute.Record]) {
+      def secs: Double = m.secs
+    }
+    def runOne(fn: Fn): Run = {
       graft.operators.LocalRoute.drain()
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
-      val secs = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-      val cpu = (cpuNs.get - c0) / 1e9
+      var buildNs = 0L
+      val (ok, m) = Measure(spark) {
+        val t0 = System.nanoTime()
+        try { val df = fn(spark, sfDir); buildNs = System.nanoTime() - t0; df.count(); true }
+        catch { case _: Throwable => false }
+      }
       val routes = graft.operators.LocalRoute.drain()
       sweep(spark)
-      Sample(secs, ok, cpu, routes)
+      Run(ok, buildNs / 1e9, m, routes)
     }
     // This machine is shared, and contention windows are SUSTAINED (r10:
     // four untouched queries drifted +60-80% in the driver run although
@@ -107,7 +181,7 @@ object Bench {
     // best sample per query: min wall among passing samples (its CPU rides
     // along — CPU of the least-contended run is the best plan-cost estimate
     // for the same reason the min wall is)
-    val bestSample: Map[String, Sample] = {
+    val bestSample: Map[String, Run] = {
       val samples = pass1.map { case (n, _, m) => (n, m) } ++
         pass2.map { case (n, _, _, m) => (n, m) } ++
         pass3.map { case (n, _, m) => (n, m) }
@@ -209,9 +283,14 @@ object Bench {
     // line above stays the driver contract, byte-format unchanged.
     try {
       def ent(key: String): String = {
-        val m = bestSample(key)
-        val routes = m.routes.map(_.json).mkString("[", ",", "]")
-        s""""$key":{"sec":${d3(m.secs)},"cpu_sec":${d3(m.cpu)},"ok":${m.ok},"routes":$routes}"""
+        val r = bestSample(key)
+        val m = r.m
+        val routes = r.routes.map(_.json).mkString("[", ",", "]")
+        s""""$key":{"sec":${d3(r.secs)},"build_sec":${d3(r.buildSec)},""" +
+          s""""cpu_sec":${d3(m.cpuSec)},"ok":${r.ok},"jobs":${m.jobs},""" +
+          s""""stages":${m.stages.size},"tasks":${m.tasks},"task_sec":${d3(m.taskSec)},""" +
+          s""""input_b":${m.inputBytes},"shuffle_read_b":${m.shuffleReadBytes},""" +
+          s""""shuffle_write_b":${m.shuffleWriteBytes},"routes":$routes}"""
       }
       val gates = gateItems.map(_._1).map(ent).mkString("{", ",", "}")
       val prods = prodItems.map(_._1).map(ent).mkString("{", ",", "}")
@@ -219,9 +298,7 @@ object Bench {
       val full =
         s"""{"total_sec":${d3(total)},"attempted":$attempted,"ran":$ran,""" +
           s""""sf":"$sfDir","cpus":$cpus,"queries":$gates,"prod":$prods}"""
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("bench_full.json"), full.getBytes("UTF-8"))
+      Files.write(Paths.get("bench_full.json"), full.getBytes("UTF-8"))
     } catch { case _: Throwable => () } // artifact only — never fail the bench
-    spark.stop()
   }
 }

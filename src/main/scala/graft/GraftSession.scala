@@ -34,6 +34,10 @@ object GraftSession {
       // collect caps those operators enforce
       .config("spark.sql.parquet.pushdown.inFilterThreshold", "10000")
       .config("spark.sql.debug.maxToStringFields", "200")
+      // parquet TIMESTAMP(NANOS) reads as a raw long, which
+      // Tables.events normalizes to micros (Spark rejects it otherwise);
+      // set here, not per read, so no read changes the session's confs
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // iterative operators localCheckpoint each round; the blocks are
       // freed by the ContextCleaner only after a driver GC notices the
       // dead RDD handles. The default periodic-GC interval (30min) lets

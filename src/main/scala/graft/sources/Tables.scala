@@ -36,7 +36,8 @@ object Tables {
     * physical parquet encodings across test-data generations, so normalize
     * all of them to a session-local (LTZ) microsecond timestamp:
     *
-    *  - TIMESTAMP(NANOS): Spark only reads it as a raw long (legacy conf);
+    *  - TIMESTAMP(NANOS): Spark only reads it as a raw long (the legacy
+    *    nanosAsLong conf, set once by GraftSession.builder);
     *    integer-divide to micros (nanos exceed 2^53 — float division would
     *    lose precision; truncation matches nanos→micros readers like DuckDB).
     *  - timestamp[us] without the UTC flag: Spark 4 reads it as
@@ -46,7 +47,6 @@ object Tables {
     *  - timestamp[us] UTC-flagged: already TIMESTAMP_LTZ, pass through.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,7 +32,11 @@ object ZOrder {
 
   /** Write `df` laid out on the Morton curve of (colA, colB) into `nFiles`
     * range partitions, with a per-file min/max sidecar on both columns for
-    * file skipping (`_minmax_index`). */
+    * file skipping (`_minmax_index`). The ranges are cut at exact
+    * equi-depth points of the curve, read off the Morton-code histogram
+    * (at most 65536 keys): `repartitionByRange` would cut at sampled
+    * points seeded by the RDD id, so the layout, and the files a range
+    * scan touches, would depend on what ran earlier in the JVM. */
   def writeZOrdered(df: DataFrame, path: String, colA: String, colB: String,
                     nFiles: Int): Unit = {
     val b = df.agg(
@@ -42,11 +47,20 @@ object ZOrder {
     def bucket(c: Column, lo: Double, hi: Double): Column =
       least(lit(255), floor((c.cast("double") - lit(lo)) / lit((hi - lo) / 256.0 + 1e-12)))
         .cast("long")
-    val z = morton8(bucket(col(colA), amin, amax), bucket(col(colB), bmin, bmax))
-    df.withColumn("_z", z)
-      .repartitionByRange(nFiles, col("_z"))
+    val zdf = df.withColumn("_z",
+      morton8(bucket(col(colA), amin, amax), bucket(col(colB), bmin, bmax)))
+    val hist = zdf.where(col("_z").isNotNull).groupBy("_z").count().orderBy("_z")
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val total = hist.map(_._2).sum
+    val upTo = hist.map(_._1).zip(hist.map(_._2).scanLeft(0L)(_ + _).tail)
+    val cuts = (1 until nFiles).flatMap(i => upTo.find(_._2 * nFiles >= i * total).map(_._1)).distinct
+    val file = cuts.foldLeft(lit(0))((f, c) => f + (col("_z") > c).cast("int"))
+    val keyed = zdf.withColumn("_f", coalesce(file, lit(0))) // null keys first, as range order puts them
+    // a HashPartitioner sends Int key k < nFiles to partition k
+    val rows = keyed.rdd.keyBy(_.getAs[Int]("_f")).partitionBy(new HashPartitioner(nFiles)).values
+    df.sparkSession.createDataFrame(rows, keyed.schema)
       .sortWithinPartitions("_z")
-      .drop("_z")
+      .drop("_z", "_f")
       .write.mode("overwrite").parquet(path)
     writeMinMaxIndex(df.sparkSession, path, colA, colB)
   }

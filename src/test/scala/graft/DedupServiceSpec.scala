@@ -78,22 +78,11 @@ class DedupServiceSpec extends SparkSpec {
     // the applied-batch marker is a one-file sidecar inside the labels
     // snapshot — reading it must launch NO job (the labeling is
     // corpus-sized; a per-ingest max(__batch) scan over it was the r8
-    // bookkeeping leak). Job-count listener, drained both sides.
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    Thread.sleep(300)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val got = DedupService.appliedBatch(spark, path)
-      Thread.sleep(300) // listener bus drain
-      assert(got == 1L, s"marker value $got")
-      assert(jobs.get == 0,
-        s"marker check launched ${jobs.get} Spark job(s) — it is scanning label data")
-    } finally spark.sparkContext.removeSparkListener(l)
+    // bookkeeping leak). Job count from Measure, drained both sides.
+    val (got, m) = Measure(spark)(DedupService.appliedBatch(spark, path))
+    assert(got == 1L, s"marker value $got")
+    assert(m.jobs == 0,
+      s"marker check launched ${m.jobs} Spark job(s) — it is scanning label data")
     // a replayed ingest rides the same O(1) check and stays a no-op
     val before = serviceLabels(path)
     DedupService.ingest(spark, path, 1L, docs.filter(col("doc_id") % 2 === 1))

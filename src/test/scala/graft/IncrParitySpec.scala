@@ -31,20 +31,9 @@ class IncrParitySpec extends SparkSpec {
   }
   private lazy val scratch: Double = mb("from_scratch")
 
-  /** Bytes read by `f`'s jobs alone, via the IncrBench listener shape. */
-  private def measuredMb(f: => Unit): Double = {
-    val bytes = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) { bytes.addAndGet(m.inputMetrics.bytesRead); () }
-      }
-    }
-    Thread.sleep(400)
-    spark.sparkContext.addSparkListener(listener)
-    try { f; Thread.sleep(400) } finally spark.sparkContext.removeSparkListener(listener)
-    bytes.get / 1024.0 / 1024.0
-  }
+  /** MB read by `f`'s jobs alone. */
+  private def measuredMb(f: => Unit): Double =
+    Measure(spark)(f)._2.inputBytes / 1024.0 / 1024.0
 
   test("sub-gate batches read under from-scratch; the 1% batch reads O(delta)") {
     assert(scratch > 0, s"broken denominator: $ps")

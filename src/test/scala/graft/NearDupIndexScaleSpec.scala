@@ -23,21 +23,8 @@ class NearDupIndexScaleSpec extends SparkSpec {
   private def docs = graft.sources.Tables.documents(spark, SmallDir)
 
   private def bytesReadDuring[A](f: => A): (A, Long) = {
-    val bytes = new java.util.concurrent.atomic.AtomicLong
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) { bytes.addAndGet(m.inputMetrics.bytesRead); () }
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      Thread.sleep(300)
-      val b0 = bytes.get
-      val r = f
-      Thread.sleep(300) // listener bus drain
-      (r, bytes.get - b0)
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (r, m) = Measure(spark)(f)
+    (r, m.inputBytes)
   }
 
   test("query pushes the candidate-id filter into the profiles scan (plan + bytes)") {

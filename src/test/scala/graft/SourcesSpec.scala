@@ -148,6 +148,13 @@ class SourcesSpec extends SparkSpec {
       .limit(1).collect().nonEmpty)
   }
 
+  test("an events read leaves the session's confs unchanged") {
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    assert(Tables.events(s, TinyDir).count() > 0)
+    assert(s.conf.getAll == before)
+  }
+
   test("events normalizer pins all three physical ts encodings to the same instant") {
     // one known instant: 2024-03-01T12:34:56.789012Z
     val micros = 1709296496789012L

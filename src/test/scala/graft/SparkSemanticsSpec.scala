@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.{CosineSimilarity, DotProduct, SparkSemantics}
 import graft.operators.LocalRoute
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.expressions.{Literal, Round}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -95,19 +94,8 @@ class SparkSemanticsSpec extends SparkSpec {
 
   /** `body`'s result and the names of the stages its jobs ran. */
   private def stagesOf[A](body: => A): (A, Seq[String]) = {
-    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        e.stageInfos.foreach(st => names.add(st.name))
-    }
-    org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    val out = try body finally {
-      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    import scala.jdk.CollectionConverters._
-    (out, names.asScala.toSeq)
+    val (out, m) = Measure(spark)(body)
+    (out, m.stageNames)
   }
 
   test("LocalRoute.rows: Some at the gate, None past it with no collect job") {
