@@ -18,8 +18,10 @@ import org.apache.spark.sql.execution.FormattedMode
   *    one query); prints rows and min/med/max seconds per query;
   *  - `plan <sfDir> [<outDir> <suffix>] <q...>`: the formatted physical
   *    plan before execution, printed or written to `<outDir>/<q>_<suffix>.txt`;
-  *  - `profile <sfDir> <q> [warm]`: one run's per-stage table, the local
-  *    stand-in for the Spark UI's stage page; `warm` runs the query first. */
+  *  - `profile <sfDir> <q> [warm]`: one run's jobs per call site
+  *    ([[Measure]]'s attribution), then its per-stage table: the local
+  *    stand-in for the Spark UI's job and stage pages; `warm` runs the
+  *    query first. */
 object Bench {
   type Fn = (SparkSession, String) => DataFrame
 
@@ -114,11 +116,12 @@ object Bench {
     warmUp(spark, sfDir, if (warm) Seq(name) else Nil)
     val (rows, m) = Measure(spark)(fnOf(name)(spark, sfDir).count())
     println(f"PROFILE $name rows=$rows total=${m.secs}%.2fs jobs=${m.jobs} stages=${m.stages.size}")
+    m.jobsPerSite.foreach { case (site, n) => println(f"SITE jobs=$n%3d  $site") }
     def mb(b: Long) = b / 1048576.0
     m.stages.sortBy(-_.wallSec).take(40).foreach { s =>
       println(f"STAGE ${s.id}%5d wall=${s.wallSec}%6.2fs task=${s.taskSec}%7.2fs " +
         f"tasks=${s.tasks}%3d in=${mb(s.inputBytes)}%7.1fMB " +
-        f"sr=${mb(s.shuffleReadBytes)}%7.1fMB sw=${mb(s.shuffleWriteBytes)}%7.1fMB  ${s.name.take(110)}")
+        f"sr=${mb(s.shuffleReadBytes)}%7.1fMB sw=${mb(s.shuffleWriteBytes)}%7.1fMB  ${s.site.take(110)}")
     }
     println(f"PROFILE_SUM stage_wall=${m.stages.map(_.wallSec).sum}%.2fs (overlaps possible)")
   }

@@ -6,7 +6,7 @@ import graft.functions.SparkSemantics
 import graft.sources.{Tables => T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types._
 
 /** Deduplication family for a training-data pipeline (SURVEY.md §2.4).
   *
@@ -223,6 +223,31 @@ object Dedup {
         .withColumn("vset", sort_array(col("set")))
     }
 
+    /** The index's parquet artifacts, declared next to their writers
+      * ([[build]], [[append]], [[writePostings]]): reading with them
+      * skips the schema-inference job a bare `spark.read.parquet` runs
+      * (one footer read) on every read. Ids are written as longs whatever
+      * the input's integral id type, so the declarations hold for every
+      * index. A memo would not help here: every batch rewrites these
+      * dirs. DedupArtifactSchemaSpec pins each against inference. */
+    private[graft] val VocabSchema: StructType = StructType(Seq(
+      StructField("sh", LongType), StructField("df", LongType)))
+    private[graft] val ProfilesSchema: StructType = StructType(Seq(
+      StructField("id", LongType), StructField("nsh", IntegerType),
+      StructField("vset", ArrayType(LongType)), StructField("prefix", ArrayType(LongType)),
+      StructField("part", StringType)))
+    private[graft] val PrefixSchema: StructType = StructType(Seq(
+      StructField("id", LongType), StructField("nsh", IntegerType),
+      StructField("sh", LongType), StructField("part", StringType),
+      StructField("shb", IntegerType)))
+
+    private def readVocab(spark: SparkSession, root: String): DataFrame =
+      spark.read.schema(VocabSchema).parquet(s"$root/vocab")
+    private[graft] def readProfiles(spark: SparkSession, root: String): DataFrame =
+      spark.read.schema(ProfilesSchema).parquet(s"$root/profiles")
+    private def readPrefix(spark: SparkSession, root: String): DataFrame =
+      spark.read.schema(PrefixSchema).parquet(s"$root/prefix")
+
     /** Directory-partition fanout of the postings layout: every posting
       * row lands under `shb=pmod(sh, B)` — the bucketed-by-gram layout.
       * Two scale effects: (a) a query's candidate join prunes to the
@@ -318,7 +343,7 @@ object Dedup {
       val vocab = sh.groupBy("sh").agg(count(lit(1)).as("df"))
       vocab.write.mode("overwrite").parquet(s"$path/vocab")
       val spark = docs.sparkSession
-      val frozen = freeze(docs, spark.read.parquet(s"$path/vocab"), n, threshold)
+      val frozen = freeze(docs, readVocab(spark, path), n, threshold)
         .localCheckpoint(true)
       // region-per-batch layout (part=<name> dirs): appends become
       // OVERWRITE-idempotent region writes, so a crashed ingest replays
@@ -342,7 +367,7 @@ object Dedup {
       }
       writeBuckets(spark, path, buckets)
       val fProfiles = Future {
-        frozen.select("id", "nsh", "vset", "prefix")
+        profileRows(frozen)
           .repartitionByRange(profileFiles, col("id")).sortWithinPartitions("id")
           .write.mode("overwrite").parquet(s"$path/profiles/part=base")
       }
@@ -352,8 +377,12 @@ object Dedup {
       writeLayout(spark, path)
     }
 
+    /** A profile table's data columns ([[ProfilesSchema]] less `part`). */
+    private def profileRows(frozen: DataFrame): DataFrame =
+      frozen.select(col("id").cast(LongType).as("id"), col("nsh"), col("vset"), col("prefix"))
+
     private def writePostings(frozen: DataFrame, dir: String, buckets: Int): Unit =
-      frozen.select(col("id"), col("nsh"), explode(col("prefix")).as("sh"))
+      frozen.select(col("id").cast(LongType).as("id"), col("nsh"), explode(col("prefix")).as("sh"))
         .withColumn("shb", pmod(col("sh"), lit(buckets.toLong)))
         .repartition(col("shb"))
         .sortWithinPartitions("sh")
@@ -389,17 +418,29 @@ object Dedup {
     def append(spark: SparkSession, path: String, batch: DataFrame,
                n: Int = 3, threshold: Double = 0.5,
                region: String = ""): Unit = {
+      appendProfile(spark, path, batch, n, threshold, region)
+      ()
+    }
+
+    /** [[append]], returning the live root and the batch's checkpointed
+      * frozen profile: the vocab an append reads is the one a following
+      * [[query]] of the same batch would freeze against (appends never
+      * touch it), so [[DedupService]] hands both to [[queryProfile]]
+      * instead of freezing the batch twice. */
+    private[ops] def appendProfile(spark: SparkSession, path: String, batch: DataFrame,
+                                   n: Int, threshold: Double,
+                                   region: String): (String, DataFrame) = {
       val root = liveRoot(spark, path)
       requireLayout(spark, root)
       val reg = if (region.nonEmpty) region else nextRegion(spark, root)
-      val frozen = freeze(batch, spark.read.parquet(s"$root/vocab"), n, threshold)
+      val frozen = freeze(batch, readVocab(spark, root), n, threshold)
         .localCheckpoint(true)
       // independent region writes off the checkpointed batch profiles —
       // overlapped like build's
       import scala.concurrent.Future
       import scala.concurrent.ExecutionContext.Implicits.global
       val fProfiles = Future {
-        frozen.select("id", "nsh", "vset", "prefix")
+        profileRows(frozen)
           .repartitionByRange(col("id")).sortWithinPartitions("id")
           .write.mode("overwrite").parquet(s"$root/profiles/part=$reg")
       }
@@ -408,7 +449,7 @@ object Dedup {
       val fPostings = Future(writePostings(frozen, s"$root/prefix/part=$reg",
         postingBuckets(spark, root)))
       awaitAll(fProfiles, fPostings)
-      ()
+      (root, frozen)
     }
 
     /** The LAZY candidate stage of [[query]] (exposed so plans are
@@ -424,7 +465,7 @@ object Dedup {
       val shbs = bpref
         .select(pmod(col("sh"), lit(postingBuckets(spark, root).toLong)).as("shb"))
         .distinct().collect().map(_.getLong(0)).sorted
-      val ipref = spark.read.parquet(s"$root/prefix")
+      val ipref = readPrefix(spark, root)
         .filter(col("shb").isin(shbs: _*)) // partition pruning: touched buckets only
         .select("id", "nsh", "sh")
       broadcast(
@@ -445,7 +486,7 @@ object Dedup {
     def batchProfile(spark: SparkSession, path: String, batch: DataFrame,
                      n: Int = 3, threshold: Double = 0.5): DataFrame = {
       val root = liveRoot(spark, path)
-      freeze(batch, spark.read.parquet(s"$root/vocab"), n, threshold)
+      freeze(batch, readVocab(spark, root), n, threshold)
     }
 
     /** Exact Jaccard >= threshold pairs with at least one endpoint in
@@ -481,8 +522,16 @@ object Dedup {
               maxBatchFraction: Double = 0.10): DataFrame = {
       val root = liveRoot(spark, path)
       requireLayout(spark, root)
-      val bprof = freeze(batch, spark.read.parquet(s"$root/vocab"), n, threshold)
+      val bprof = freeze(batch, readVocab(spark, root), n, threshold)
         .localCheckpoint(true)
+      queryProfile(spark, root, bprof, threshold, maxPushIds, maxBatchFraction)
+    }
+
+    /** [[query]] from the batch's checkpointed frozen profile `bprof` at
+      * an already-resolved live `root`. */
+    private[ops] def queryProfile(spark: SparkSession, root: String, bprof: DataFrame,
+                                  threshold: Double, maxPushIds: Int = 10000,
+                                  maxBatchFraction: Double = 0.10): DataFrame = {
       // BATCH-FRACTION routing (VERDICT r9 #3): the broadcast-batch +
       // pruned-postings plan below is the O(delta) shape — its wins
       // (touched-bucket pruning, pushed id filter, batch broadcast) all
@@ -518,7 +567,7 @@ object Dedup {
           (pairs.toDF("id_a", "id_b"),
             if (ids.length <= maxPushIds) Some(ids) else None)
         }
-      val indexed0 = spark.read.parquet(s"$root/profiles")
+      val indexed0 = readProfiles(spark, root)
         .select("id", "nsh", "vset") // drop the part= region column
       val indexed = candIds.fold(indexed0)(ids =>
         indexed0.filter(col("id").isin(ids: _*)))
@@ -548,7 +597,7 @@ object Dedup {
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val mtime = fs.getFileStatus(p).getModificationTime
       profileCountCache.computeIfAbsent((root, mtime),
-        _ => spark.read.parquet(p.toString).count())
+        _ => readProfiles(spark, root).count())
     }
 
     /** The OVERSIZED-BATCH route of [[query]]: when the batch is a
@@ -570,7 +619,7 @@ object Dedup {
       * as pure CPU. */
     private def queryOversized(spark: SparkSession, root: String,
                                bprof: DataFrame, threshold: Double): DataFrame = {
-      val all = spark.read.parquet(s"$root/profiles")
+      val all = readProfiles(spark, root)
         .select("id", "nsh", "vset", "prefix")
         .unionByName(bprof.select("id", "nsh", "vset", "prefix"))
         .dropDuplicates("id") // a batch already folded in by append
@@ -652,9 +701,9 @@ object Dedup {
       * miss). */
     private[graft] def frozenAt(spark: SparkSession, root: String): Frozen =
       Frozen(root,
-        spark.read.parquet(s"$root/vocab"),
-        spark.read.parquet(s"$root/prefix"),
-        spark.read.parquet(s"$root/profiles"))
+        readVocab(spark, root),
+        readPrefix(spark, root),
+        readProfiles(spark, root))
 
     /** The index-side tables [[screen]] consumes, read fresh off the live
       * root ([[frozenProbe]] + [[frozenAt]] in one shot — the one-shot
@@ -710,7 +759,7 @@ object Dedup {
                threshold: Double = 0.5): DataFrame = {
       val root = liveRoot(spark, path)
       requireLayout(spark, root)
-      val meRows = spark.read.parquet(s"$root/profiles")
+      val meRows = readProfiles(spark, root)
         .filter(col("id") === docId)
         .select("nsh", "vset", "prefix").collect()
       if (meRows.isEmpty)
@@ -725,7 +774,7 @@ object Dedup {
       val buckets = postingBuckets(spark, root).toLong
       val myShbs = myPrefix.map(h => java.lang.Math.floorMod(h, buckets))
         .distinct.sorted
-      val cand = spark.read.parquet(s"$root/prefix")
+      val cand = readPrefix(spark, root)
         .filter(col("shb").isin(myShbs: _*)) // partition pruning: ≤ plen buckets
         .filter(col("sh").isin(myPrefix: _*)) // pushed IN filter within them
         .filter(col("id") =!= docId)
@@ -733,7 +782,7 @@ object Dedup {
           lit(threshold) * dbl(greatest(lit(myNsh), col("nsh"))))
         .select(col("id").as("id_b")).distinct()
       cand
-        .join(spark.read.parquet(s"$root/profiles")
+        .join(readProfiles(spark, root)
           .select(col("id").as("id_b"), col("vset").as("sb"), col("nsh").as("nb")), "id_b")
         .withColumn("n_common",
           graft.functions.SetFunctions.intersectCountSorted(
@@ -767,7 +816,7 @@ object Dedup {
                         sampleCap: Long = 2000L): DataFrame = {
       val root = liveRoot(spark, path)
       requireLayout(spark, root)
-      val profiles = spark.read.parquet(s"$root/profiles")
+      val profiles = readProfiles(spark, root)
         .select("id", "nsh", "vset", "prefix")
       val sample = boundedHashSample(profiles, "id", sampleCap)
         .localCheckpoint(true)

@@ -4,6 +4,7 @@ import graft.sources.AtomicSwap
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The maintained corpus-dedup SERVICE: the full daily loop behind
   * q_dedup_cc_incr as one persisted, crash-safe API — a
@@ -38,9 +39,18 @@ object DedupService {
     val p = new Path(labelsDir(path))
     val live = AtomicSwap.live(fs(spark, path), p)
       .getOrElse(throw new IllegalStateException(s"no labeling at $p"))
-    spark.read.parquet(live.toString)
+    spark.read.schema(LabelsSchema).parquet(live.toString)
       .select("doc_id", "component")
   }
+
+  /** The labeling snapshot's schema, declared next to its writer
+    * ([[commitLabels]], which writes longs whatever the input's integral
+    * id type): reading with it skips the schema-inference job a bare
+    * `spark.read.parquet` runs. DedupArtifactSchemaSpec pins it against
+    * inference. */
+  private[graft] val LabelsSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("component", LongType),
+    StructField("__batch", LongType)))
 
   private val MarkerFile = "_applied_batch"
 
@@ -75,7 +85,8 @@ object DedupService {
     val f = fs(spark, path)
     val next = AtomicSwap.nextOf(cur)
     f.delete(next, true)
-    lbl.select(col("doc_id"), col("component"), lit(batchId).as("__batch"))
+    lbl.select(col("doc_id").cast(LongType).as("doc_id"),
+      col("component").cast(LongType).as("component"), lit(batchId).as("__batch"))
       .write.mode("overwrite").parquet(next.toString)
     // the applied-batch marker rides INSIDE the staged snapshot: it
     // lands (or not) atomically with the labels at the swap commit
@@ -130,9 +141,11 @@ object DedupService {
       s"ingest: batch id $batchId breaks the monotone contract (labeling " +
         s"carries $last) — restarting the stream with a fresh checkpoint " +
         "against an existing service path would corrupt the index")
-    // 1. index append — overwrite-idempotent region write
-    Dedup.NearDupIndex.append(spark, indexDir(path), batch, region = s"b$batchId")
-    val pairs = Dedup.NearDupIndex.query(spark, indexDir(path), batch)
+    // 1. index append — overwrite-idempotent region write; the query
+    // reuses the batch profile the append froze
+    val (root, bprof) = Dedup.NearDupIndex.appendProfile(spark, indexDir(path), batch,
+      n = 3, threshold = 0.5, region = s"b$batchId")
+    val pairs = Dedup.NearDupIndex.queryProfile(spark, root, bprof, threshold = 0.5)
       .select(col("id_a").as("src"), col("id_b").as("dst"))
     val c0 = labels(spark, path)
       .select(col("doc_id").as("node"), col("component").as("lbl"))

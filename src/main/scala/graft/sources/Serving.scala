@@ -67,7 +67,7 @@ object Serving {
       concat_ws(",", col("doc_id"), col("component")),
       "dedup_labels", sourceTag, loadedAtUs, prov)
     ProvenanceOps.record(
-      spark.read.parquet(s"$outDir/dedup/index/profiles").select("id", "nsh"),
+      graft.ops.Dedup.NearDupIndex.readProfiles(spark, s"$outDir/dedup/index").select("id", "nsh"),
       concat_ws(",", col("id"), col("nsh")),
       "dedup_index", sourceTag, loadedAtUs, prov)
 

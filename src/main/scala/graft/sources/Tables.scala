@@ -1,16 +1,25 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
+import scala.util.Try
 
 /** Source layer: typed access to the benchmark parquet tables plus the
   * generic ingestion helpers the reference pipeline needs (CSV/TSV with
   * explicit schema — the `python/csv2sql.py` / `python/csv_utils.py`
   * capability — and partitioned parquet sinks).
   *
-  * All reads are plain `spark.read.parquet`, so Catalyst pushes filters
-  * and prunes columns into the scan (verify via explain: PushedFilters /
-  * ReadSchema).
+  * A table read infers the file's schema once per source, not once per
+  * read: a bare `spark.read.parquet` launches a schema-inference job (one
+  * footer read) every time, so [[table]] memoizes the inferred schema and
+  * reads `spark.read.schema(s).parquet(path)` afterwards. The memo key is
+  * the path's `FileStatus` (qualified path, length, modification time)
+  * plus every set `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*`
+  * value, so a rewritten file or a changed inference conf is inferred
+  * again; it holds the 256 most recently used sources. Filters and
+  * column pruning still push into the scan (verify via explain:
+  * PushedFilters / ReadSchema).
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -18,7 +27,35 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    readParquetMemo(spark, s"$dir/$name.parquet")
+
+  private val SchemaMemoEntries = 256
+  private type SchemaKey = (String, Long, Long, Seq[(String, String)])
+  private val schemaMemo = new java.util.LinkedHashMap[SchemaKey, StructType](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[SchemaKey, StructType]): Boolean =
+      size() > SchemaMemoEntries
+  }
+
+  /** A parquet read that infers `path`'s schema only on a memo miss. If
+    * the status call fails (a missing path), the read is a plain
+    * `spark.read.parquet`, so Spark raises its own error. */
+  private def readParquetMemo(spark: SparkSession, path: String): DataFrame = {
+    val key = Try {
+      val p = new Path(path)
+      val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+      val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+      }.sorted
+      (st.getPath.toString, st.getLen, st.getModificationTime, confs)
+    }.toOption
+    key.flatMap(k => schemaMemo.synchronized(Option(schemaMemo.get(k)))) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        key.foreach(k => schemaMemo.synchronized(schemaMemo.put(k, df.schema)))
+        df
+    }
+  }
 
   /** Like [[table]] but routes names with non-standard physical types
     * through their normalizing accessor (events: TIMESTAMP(NANOS)). */
@@ -145,11 +182,19 @@ object Tables {
     * min/max column statistics are tight and disjoint, so a filtered read
     * later skips whole files/row-groups on the sort key — the 1-D data
     * layout lever for a 100 TB table scanned by key ranges (the reference
-    * equivalent: MySQL clustered index order). */
-  def writeSorted(df: DataFrame, path: String, sortCol: String, numFiles: Int): Unit =
-    df.repartitionByRange(numFiles, org.apache.spark.sql.functions.col(sortCol))
-      .sortWithinPartitions(sortCol)
-      .write.mode("overwrite").parquet(path)
+    * equivalent: MySQL clustered index order). A numeric key is cut
+    * exactly ([[ZOrder.placeByExactCuts]] over 65536 equi-width key
+    * buckets), so the layout depends only on the data; any other key type
+    * keeps `repartitionByRange`'s sampled cut. */
+  def writeSorted(df: DataFrame, path: String, sortCol: String, numFiles: Int): Unit = {
+    val placed = df.select(sortCol).schema.head.dataType match {
+      case _: org.apache.spark.sql.types.NumericType =>
+        val key = ZOrder.equiWidthBuckets(df, Seq(sortCol), bits = 16).head
+        ZOrder.placeByExactCuts(df, key, numFiles).drop("_k")
+      case _ => df.repartitionByRange(numFiles, org.apache.spark.sql.functions.col(sortCol))
+    }
+    placed.sortWithinPartitions(sortCol).write.mode("overwrite").parquet(path)
+  }
 
   /** ORC read/write: second columnar format (same pushdown/pruning
     * contract as parquet — predicate pushdown via ORC's min/max stripes,

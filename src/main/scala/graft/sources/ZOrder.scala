@@ -32,35 +32,15 @@ object ZOrder {
 
   /** Write `df` laid out on the Morton curve of (colA, colB) into `nFiles`
     * range partitions, with a per-file min/max sidecar on both columns for
-    * file skipping (`_minmax_index`). The ranges are cut at exact
-    * equi-depth points of the curve, read off the Morton-code histogram
-    * (at most 65536 keys): `repartitionByRange` would cut at sampled
-    * points seeded by the RDD id, so the layout, and the files a range
-    * scan touches, would depend on what ran earlier in the JVM. */
+    * file skipping (`_minmax_index`). The ranges are cut exactly
+    * ([[placeByExactCuts]] over the Morton code of 256 equi-width buckets
+    * per column). */
   def writeZOrdered(df: DataFrame, path: String, colA: String, colB: String,
                     nFiles: Int): Unit = {
-    val b = df.agg(
-      min(col(colA)).as("amin"), max(col(colA)).as("amax"),
-      min(col(colB)).as("bmin"), max(col(colB)).as("bmax")).head()
-    val (amin, amax) = (b.getAs[Number]("amin").doubleValue(), b.getAs[Number]("amax").doubleValue())
-    val (bmin, bmax) = (b.getAs[Number]("bmin").doubleValue(), b.getAs[Number]("bmax").doubleValue())
-    def bucket(c: Column, lo: Double, hi: Double): Column =
-      least(lit(255), floor((c.cast("double") - lit(lo)) / lit((hi - lo) / 256.0 + 1e-12)))
-        .cast("long")
-    val zdf = df.withColumn("_z",
-      morton8(bucket(col(colA), amin, amax), bucket(col(colB), bmin, bmax)))
-    val hist = zdf.where(col("_z").isNotNull).groupBy("_z").count().orderBy("_z")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val total = hist.map(_._2).sum
-    val upTo = hist.map(_._1).zip(hist.map(_._2).scanLeft(0L)(_ + _).tail)
-    val cuts = (1 until nFiles).flatMap(i => upTo.find(_._2 * nFiles >= i * total).map(_._1)).distinct
-    val file = cuts.foldLeft(lit(0))((f, c) => f + (col("_z") > c).cast("int"))
-    val keyed = zdf.withColumn("_f", coalesce(file, lit(0))) // null keys first, as range order puts them
-    // a HashPartitioner sends Int key k < nFiles to partition k
-    val rows = keyed.rdd.keyBy(_.getAs[Int]("_f")).partitionBy(new HashPartitioner(nFiles)).values
-    df.sparkSession.createDataFrame(rows, keyed.schema)
-      .sortWithinPartitions("_z")
-      .drop("_z", "_f")
+    val Seq(a, b) = equiWidthBuckets(df, Seq(colA, colB), bits = 8)
+    placeByExactCuts(df, morton8(a, b), nFiles)
+      .sortWithinPartitions("_k")
+      .drop("_k")
       .write.mode("overwrite").parquet(path)
     writeMinMaxIndex(df.sparkSession, path, colA, colB)
   }
@@ -70,9 +50,47 @@ object ZOrder {
     * colB predicates). */
   def writeSortedBy(df: DataFrame, path: String, colA: String, colB: String,
                     nFiles: Int): Unit = {
-    df.repartitionByRange(nFiles, col(colA)).sortWithinPartitions(colA)
-      .write.mode("overwrite").parquet(path)
+    Tables.writeSorted(df, path, colA, nFiles)
     writeMinMaxIndex(df.sparkSession, path, colA, colB)
+  }
+
+  /** Equi-width bucket ids in [0, 2^bits) of each numeric column over its
+    * observed min/max (one aggregate). A null value buckets to null, and
+    * so does every value of a column with no non-null value. */
+  private[sources] def equiWidthBuckets(df: DataFrame, cols: Seq[String],
+                                        bits: Int): Seq[Column] = {
+    val n = 1L << bits
+    val bounds = cols.flatMap(c => Seq(min(col(c).cast("double")), max(col(c).cast("double"))))
+    val r = df.agg(bounds.head, bounds.tail: _*).head()
+    cols.indices.map { i =>
+      if (r.isNullAt(2 * i)) lit(null).cast("long")
+      else {
+        val (lo, hi) = (r.getDouble(2 * i), r.getDouble(2 * i + 1))
+        least(lit(n - 1), floor((col(cols(i)).cast("double") - lit(lo)) / lit((hi - lo) / n + 1e-12)))
+          .cast("long")
+      }
+    }
+  }
+
+  /** `df`'s rows placed in `nFiles` partitions cut at exact equi-depth
+    * points of the histogram of `key` (a long expression with at most
+    * 65536 distinct values; null keys go first, as range order puts
+    * them), with the key kept as column `_k`. A row's partition depends
+    * only on the data: `repartitionByRange` would cut at sampled points
+    * seeded by the RDD id, so the layout, and the files a range scan
+    * touches, would move with whatever ran earlier in the JVM. */
+  private[sources] def placeByExactCuts(df: DataFrame, key: Column, nFiles: Int): DataFrame = {
+    val kdf = df.withColumn("_k", key)
+    val hist = kdf.where(col("_k").isNotNull).groupBy("_k").count().orderBy("_k")
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val total = hist.map(_._2).sum
+    val upTo = hist.map(_._1).zip(hist.map(_._2).scanLeft(0L)(_ + _).tail)
+    val cuts = (1 until nFiles).flatMap(i => upTo.find(_._2 * nFiles >= i * total).map(_._1)).distinct
+    val file = cuts.foldLeft(lit(0))((f, c) => f + (col("_k") > c).cast("int"))
+    val keyed = kdf.withColumn("_f", coalesce(file, lit(0)))
+    // a HashPartitioner sends Int key k < nFiles to partition k
+    val rows = keyed.rdd.keyBy(_.getAs[Int]("_f")).partitionBy(new HashPartitioner(nFiles)).values
+    df.sparkSession.createDataFrame(rows, keyed.schema).drop("_f")
   }
 
   private def writeMinMaxIndex(spark: SparkSession, path: String,

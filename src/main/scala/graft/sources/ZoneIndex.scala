@@ -76,9 +76,7 @@ object ZoneIndex {
   def writeWithZoneIndex(df: DataFrame, path: String, sortCol: String,
                          nFiles: Int, extraCols: Seq[String] = Nil,
                          ndvK: Int = 1024): Unit = {
-    df.repartitionByRange(nFiles, col(sortCol))
-      .sortWithinPartitions(sortCol)
-      .write.mode("overwrite").parquet(path)
+    Tables.writeSorted(df, path, sortCol, nFiles)
     val spark = df.sparkSession
     zoneRows(spark.read.parquet(path), sortCol +: extraCols, ndvK)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/_zone_index")

@@ -16,4 +16,18 @@ class MeasureSpec extends SparkSpec {
     val ((), idle) = Measure(spark)(())
     assert(idle.jobs == 0 && idle.tasks == 0 && idle.stages.isEmpty, idle)
   }
+
+  test("jobs are attributed to the graft frame that started them, AQE stage jobs included") {
+    val df = graft.sources.Tables.orders(spark, TinyDir)
+      .groupBy("o_custkey").count().orderBy("o_custkey")
+    val (_, m) = Measure(spark)(df.collect())
+    assert(m.jobs >= 2, m.jobSites) // AQE: a shuffle-stage job, then the result
+    assert(m.jobSites.forall(_.contains("MeasureSpec.scala:")), m.jobSites)
+    assert(m.jobsPerSite.map(_._2).sum == m.jobs)
+    assert(Measure.graftFrame(
+      "org.apache.spark.sql.Dataset.count(Dataset.scala:1)\n" +
+        "graft.Measure$.apply(Measure.scala:2)\n" +
+        "graft.ops.Dedup$NearDupIndex$.$anonfun$query$1(Dedup.scala:3)\n" +
+        "graft.Bench$.main(Bench.scala:4)").contains("query at Dedup.scala:3"))
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.Tables
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.Files
@@ -22,6 +23,47 @@ class SourcesSpec extends SparkSpec {
     assert(df.schema == schema)
     val rows = df.orderBy("id").collect()
     assert(rows.length == 2 && rows(1).getString(1) == "EGFR" && rows(1).getDouble(2) == 7.25)
+  }
+
+  test("a table read infers its schema once per source, and again after a rewrite") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_memo").toFile.getAbsolutePath
+    val path = s"$dir/t.parquet"
+    Seq((1L, "a")).toDF("id", "v").write.parquet(path)
+    val (first, m1) = Measure(spark)(Tables.table(spark, dir, "t"))
+    assert(m1.jobs == 1, m1.jobSites)
+    val (again, m2) = Measure(spark)(Tables.table(spark, dir, "t"))
+    assert(m2.jobs == 0, m2.jobSites)
+    assert(again.schema == first.schema && again.collect().toSeq == Seq(Row(1L, "a")))
+    // rewritten with another schema, under a later modification time
+    Seq((2.5, 7)).toDF("x", "y").write.mode("overwrite").parquet(path)
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.setTimes(p, fs.getFileStatus(p).getModificationTime + 60000L, -1L)
+    val rewritten = Tables.table(spark, dir, "t")
+    assert(rewritten.columns.toSeq == Seq("x", "y"))
+    assert(rewritten.collect().toSeq == Seq(Row(2.5, 7)))
+  }
+
+  test("a set parquet inference conf is part of the table-schema memo key") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = Files.createTempDirectory("graft_memo_conf").toFile.getAbsolutePath
+    // an unannotated binary column, written without Spark's schema
+    // metadata (which inference would prefer over the parquet types)
+    val schema = MessageTypeParser.parseMessageType("message m { required binary b; }")
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$dir/bin.parquet"))
+      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("b", "hi"))
+    finally w.close()
+    assert(Tables.table(spark, dir, "bin").schema("b").dataType == BinaryType)
+    withConf("spark.sql.parquet.binaryAsString" -> "true") {
+      val t = Tables.table(spark, dir, "bin")
+      assert(t.schema("b").dataType == StringType)
+      assert(t.head().getString(0) == "hi")
+    }
+    assert(Tables.table(spark, dir, "bin").schema("b").dataType == BinaryType)
   }
 
   test("readParquetMerged unions evolving schemas with nulls for absent columns") {
