@@ -50,10 +50,13 @@ object Measure {
 
   /** `method at File.scala:line` of the first graft frame in a call-site
     * stack (one frame per line), skipping the measurement harness's own
-    * (`Bench`, `Measure`); a lambda frame names its enclosing method. */
+    * (`Bench`, `Measure`) and the shared route helpers' (`LocalRoute`'s
+    * checkpoint, probe and collect run for the operator that called
+    * them); a lambda frame names its enclosing method. */
   private[graft] def graftFrame(stack: String): Option[String] =
     stack.linesIterator.map(_.trim).find { l =>
-      l.startsWith("graft.") && !l.startsWith("graft.Bench") && !l.startsWith("graft.Measure")
+      l.startsWith("graft.") && !l.startsWith("graft.Bench") && !l.startsWith("graft.Measure") &&
+        !l.startsWith("graft.operators.LocalRoute")
     }.map { l =>
       val open = l.indexOf('(')
       val qualified = if (open < 0) l else l.substring(0, open)

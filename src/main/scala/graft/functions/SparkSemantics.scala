@@ -22,6 +22,11 @@ object SparkSemantics {
     else if (java.lang.Double.isNaN(x) && java.lang.Double.isNaN(y)) 0
     else if (java.lang.Double.isNaN(x)) 1 else -1
 
+  /** Spark's `xxhash64` of one BIGINT value under `seed` (the function's
+    * default seed is 42): the 8-byte word path of catalyst's XXH64. */
+  def xxhash64Long(x: Long, seed: Long = 42L): Long =
+    org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(x, seed)
+
   /** [[DotProduct]]'s fold: left to right over the common prefix. */
   def dot(a: Array[Double], b: Array[Double]): Double = {
     val n = math.min(a.length, b.length)

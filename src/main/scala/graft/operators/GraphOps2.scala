@@ -309,10 +309,10 @@ object GraphOps2 {
     * parent per child), so a partial merge can never return silently. */
   def connectedComponents(edges: DataFrame, maxIters: Int,
                           driverMaxEdges: Long = DriverCcMaxEdges): DataFrame = {
-    val e0 = e0Checkpoint(edges.select(col("src"), col("dst"))
+    val (e0, n0) = LocalRoute.checkpoint(edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")))
     LocalRoute.rows(e0, driverMaxEdges, "connectedComponents",
-        LocalRoute.longKeyed(e0)).foreach { rows =>
+        LocalRoute.longKeyed(e0), known = Some(n0)).foreach { rows =>
       return driverComponents(edges.sparkSession, longPairs(rows))
     }
     val nodes = e0Checkpoint(e0.select(col("src").as("node"))
@@ -604,10 +604,14 @@ object GraphOps2 {
   def labelPropagation(symEdges: DataFrame, iters: Int,
                        driverMaxEdges: Long = DriverCcMaxEdges,
                        inputMaterialized: Boolean = false): DataFrame = {
-    val e = if (inputMaterialized) symEdges.select("src", "dst") // see pagerankInt
-            else e0Checkpoint(symEdges.select("src", "dst"))
+    val (e, known) =
+      if (inputMaterialized) (symEdges.select("src", "dst"), None) // see pagerankInt
+      else {
+        val (cp, n) = LocalRoute.checkpoint(symEdges.select("src", "dst"))
+        (cp, Some(n))
+      }
     LocalRoute.rows(e, driverMaxEdges, "labelPropagation",
-        LocalRoute.longKeyed(e)).foreach { rows =>
+        LocalRoute.longKeyed(e), known = known).foreach { rows =>
       val arr = longPairs(rows)
       val spark = symEdges.sparkSession
       import spark.implicits._
@@ -906,29 +910,34 @@ object GraphOps2 {
     * re-solve runs on supernodes — its size is bounded by the edges the
     * batch TOUCHES, not the corpus. Labels are min-ids, and min over a
     * merged set = min of the parts' mins, so composing labelings is
-    * exact. Returns (node, lbl) for every node in c0 ∪ newEdges. */
+    * exact. Returns (node, lbl) for every node in c0 ∪ newEdges.
+    *
+    * The new edges are materialized once (the collapse and the new-node
+    * set both read them); with none, `c0` returns unchanged and no CC
+    * round runs. */
   def incrementalComponents(c0: DataFrame, newEdges: DataFrame): DataFrame = {
+    val (edges, n) = LocalRoute.checkpoint(newEdges.select("src", "dst"))
+    if (n == 0L) return c0
     val lblSrc = c0.select(col("node").as("src"), col("lbl").as("lsrc"))
     val lblDst = c0.select(col("node").as("dst"), col("lbl").as("ldst"))
-    val collapsed = newEdges
+    val collapsed = edges
       .join(lblSrc, Seq("src"), "left")
       .join(lblDst, Seq("dst"), "left")
       .select(coalesce(col("lsrc"), col("src")).as("src"),
         coalesce(col("ldst"), col("dst")).as("dst"))
       .filter(col("src") =!= col("dst"))
     val c1 = connectedComponents(collapsed, 20)
-    // old nodes: re-route their label through the supernode re-solve;
-    // new-edge endpoints not in c0 pick up their own c1 label
-    val newNodes = newEdges.select(col("src").as("node"))
-      .union(newEdges.select(col("dst").as("node"))).distinct()
+    // old nodes re-route their label through the supernode re-solve;
+    // new-edge endpoints not in c0 enter labeled by their own id, which
+    // no c0 label equals (labels are c0 nodes), so the same c1 join
+    // relabels both
+    val newNodes = edges.select(col("src").as("node"))
+      .union(edges.select(col("dst").as("node"))).distinct()
       .join(c0.select(col("node")), Seq("node"), "left_anti")
-    val old = c0
+    c0.select(col("node"), col("lbl"))
+      .union(newNodes.select(col("node"), col("node").as("lbl")))
       .join(c1.select(col("node").as("lbl"), col("lbl").as("l1")), Seq("lbl"), "left")
       .select(col("node"), coalesce(col("l1"), col("lbl")).as("lbl"))
-    val fresh = newNodes
-      .join(c1, Seq("node"), "left")
-      .select(col("node"), coalesce(col("lbl"), col("node")).as("lbl"))
-    old.union(fresh)
   }
 
   /** Incremental near-dup clustering (the dedup-index MAINTENANCE op):

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.{LongType, StructType}
 
 /** The driver route shared by every size-routed operator.
@@ -22,8 +23,9 @@ object LocalRoute {
 
   /** One routing decision. `size` is the measured input in `unit` — for a
     * [[rows]] probe the bounded probe count, so `gate + 1` reads as "over
-    * the gate" — or -1 when the input was ineligible and never measured.
-    * `arm` is `local` or `distributed`. */
+    * the gate"; for a known-count decision (a [[checkpoint]]'s count) the
+    * exact count — or -1 when the input was ineligible and never
+    * measured. `arm` is `local` or `distributed`. */
   final case class Record(op: String, unit: String, size: Long, gate: Long, arm: String) {
     def json: String =
       s"""{"op":"$op","unit":"$unit","size":$size,"gate":$gate,"arm":"$arm"}"""
@@ -45,18 +47,36 @@ object LocalRoute {
     local
   }
 
+  /** How long [[checkpoint]] waits for an observation's metrics, which
+    * arrive through the listener bus after the checkpoint's jobs end. */
+  private val ObservationWait = scala.concurrent.duration.Duration(10, "s")
+
+  /** `df` eagerly `localCheckpoint`ed, with its exact row count: a
+    * `count(lit(1))` observation rides the checkpoint's own jobs, so the
+    * count costs no extra job. Should the metrics not arrive within
+    * [[ObservationWait]], the count falls back to a `count()` over the
+    * checkpointed blocks rather than blocking. */
+  def checkpoint(df: DataFrame): (DataFrame, Long) = {
+    val (observed, obs) = Observability.observed(df, Seq(count(lit(1)).as("rows")))
+    val cp = observed.localCheckpoint(true)
+    val n = scala.util.Try(scala.concurrent.Await.result(obs.future, ObservationWait))
+      .map(_.getLong(0)).getOrElse(cp.count())
+    (cp, n)
+  }
+
   /** The rows of `df` when it holds at most `maxRows` rows, else None. A
     * bounded `limit(gate + 1).count()` decides executor-side (the global
     * limit gathers at most gate + 1 rows into one task), and only an
     * under-gate input is then collected: the over-gate path materializes
     * nothing on the driver, where collecting the prefix just to discard
     * it would allocate ~gate boxed Rows. `df` should be checkpointed —
-    * the probe, the collect and the distributed loop all read it. With
-    * `valuesPerRow` > 1 the decision is recorded in `values`. */
+    * the probe, the collect and the distributed loop all read it. A
+    * `known` row count (from [[checkpoint]]) decides without the probe.
+    * With `valuesPerRow` > 1 the decision is recorded in `values`. */
   def rows(df: DataFrame, maxRows: Long, op: String, eligible: Boolean = true,
-           valuesPerRow: Long = 1L): Option[Array[Row]] = {
+           valuesPerRow: Long = 1L, known: Option[Long] = None): Option[Array[Row]] = {
     val gate = math.min(maxRows, Int.MaxValue - 2L).toInt
-    val n = if (eligible) df.limit(gate + 1).count() else 0L
+    val n = if (eligible) known.getOrElse(df.limit(gate + 1).count()) else 0L
     val unit = if (valuesPerRow == 1L) "rows" else "values"
     if (admit(op, unit, n * valuesPerRow, gate * valuesPerRow, eligible)) Some(df.collect())
     else None

@@ -140,8 +140,16 @@ object Dedup {
     * lossless prune) before verification computes |A∩B| on the collected
     * (hashed) sets. Identical output to the naive all-pairs join. */
   def jaccardPairsPrefix(docs: DataFrame, idCol: String, textCol: String,
-                         n: Int, threshold: Double): DataFrame = {
-    val profiles = shingleProfiles(docs, idCol, textCol, n, threshold)
+                         n: Int, threshold: Double): DataFrame =
+    prefixPairs(shingleProfiles(docs, idCol, textCol, n, threshold), threshold)
+
+  /** The SSJoin of [[jaccardPairsPrefix]] over already-built profiles
+    * (`id`, `nsh`, `prefix`, `vset`, read twice: checkpoint them). Any
+    * total gram order shared by every profile keeps it lossless; under
+    * the live document-frequency order it is [[jaccardPairsPrefix]]
+    * itself, which is what a [[NearDupIndex]]'s frozen profiles hold at
+    * build time ([[DedupService]]'s init joins those). */
+  private[graft] def prefixPairs(profiles: DataFrame, threshold: Double): DataFrame = {
     val prefix = profiles.select(col("id"), col("nsh"), explode(col("prefix")).as("sh"))
     val cand = prefix.select(col("id").as("id_a"), col("nsh").as("na"), col("sh"))
       .join(prefix.select(col("id").as("id_b"), col("nsh").as("nb"), col("sh")), Seq("sh"))
@@ -264,41 +272,63 @@ object Dedup {
       * index gets 4 dirs instead of 64 near-empty ones (VERDICT r14 #4);
       * a corpus-scale index grows past 64 instead of piling petabytes
       * into them. Indexes persisted before the sidecar existed read as
-      * the legacy constant. */
+      * the legacy constant.
+      *
+      * Each `profiles/part=<region>` dir carries a `_rows` sidecar: the
+      * region's profile row count, written after its parquet files from
+      * a count the writer already holds (build's Σplen aggregation, an
+      * append's observed checkpoint). [[indexedProfileCount]] sums them,
+      * so the query route decides without a job; Spark's file listing
+      * skips `_`-prefixed files, and an overwrite of the region deletes
+      * the old sidecar with the old files. */
     val PostingBuckets = 64 // legacy default: pre-r15 indexes have no sidecar
     private val BucketTargetRows = 4000000L // ~tens-of-MB parquet per bucket
     private val MaxPostingBuckets = 16384L
     private val BucketsFile = "_buckets"
+    private val RowsFile = "_rows"
 
     private def deriveBuckets(postingRows: Long): Int =
       math.max(4L, math.min(MaxPostingBuckets,
         postingRows / BucketTargetRows + 1L)).toInt
 
-    private def writeBuckets(spark: SparkSession, root: String, b: Int): Unit = {
-      val p = new org.apache.hadoop.fs.Path(root, BucketsFile)
+    /** Writes `v` as the decimal text of the sidecar file `p`. */
+    private def writeSidecar(spark: SparkSession, p: org.apache.hadoop.fs.Path,
+                             v: Long): Unit = {
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val out = fs.create(p, true)
-      try out.write(b.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      try out.write(v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
     }
 
-    /** The modulus this root's postings were written under ([[BucketsFile]]
-      * sidecar; [[PostingBuckets]] for pre-sidecar indexes). */
-    private def postingBuckets(spark: SparkSession, root: String): Int = {
-      val p = new org.apache.hadoop.fs.Path(root, BucketsFile)
+    /** The number in sidecar file `p`; None when it is absent or not a
+      * number. */
+    private def readSidecar(spark: SparkSession, p: org.apache.hadoop.fs.Path): Option[Long] = {
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) PostingBuckets
+      if (!fs.exists(p)) None
       else {
         val in = fs.open(p)
         try {
-          val b = new Array[Byte](16)
+          val b = new Array[Byte](24)
           val read = in.read(b)
           val s = if (read > 0)
             new String(b, 0, read, java.nio.charset.StandardCharsets.UTF_8).trim
           else ""
-          if (s.nonEmpty && s.forall(_.isDigit)) s.toInt else PostingBuckets
+          if (s.nonEmpty && s.length <= 18 && s.forall(_.isDigit)) Some(s.toLong) else None
         } finally in.close()
       }
+    }
+
+    /** The modulus this root's postings were written under ([[BucketsFile]]
+      * sidecar; [[PostingBuckets]] for pre-sidecar indexes). */
+    private def postingBuckets(spark: SparkSession, root: String): Int =
+      readSidecar(spark, new org.apache.hadoop.fs.Path(root, BucketsFile))
+        .filter(_ <= Int.MaxValue).fold(PostingBuckets)(_.toInt)
+
+    /** Writes one region's profile rows and then its [[RowsFile]]. */
+    private def writeProfiles(spark: SparkSession, profiles: DataFrame, dir: String,
+                              rows: Long): Unit = {
+      profiles.write.mode("overwrite").parquet(dir)
+      writeSidecar(spark, new org.apache.hadoop.fs.Path(dir, RowsFile), rows)
     }
 
     /** Postings-LAYOUT version marker: v2 = shb-bucketed postings +
@@ -339,6 +369,19 @@ object Dedup {
 
     def build(docs: DataFrame, path: String, n: Int = 3,
               threshold: Double = 0.5, profileFiles: Int = 32): Unit = {
+      buildProfile(docs, path, n, threshold, profileFiles)
+      ()
+    }
+
+    /** [[build]], returning the corpus's checkpointed frozen profiles
+      * (`id`, `nsh`, `prefix`, `vset`, ...). Their order is the live
+      * document-frequency order at build time, so [[prefixPairs]] over
+      * them is the corpus's [[jaccardPairsPrefix]]: [[DedupService]]'s
+      * init solves its components from them instead of shingling the
+      * corpus again. */
+    private[graft] def buildProfile(docs: DataFrame, path: String, n: Int = 3,
+                                    threshold: Double = 0.5,
+                                    profileFiles: Int = 32): DataFrame = {
       val sh = wordShingleHashes(docs, "doc_id", "text", n)
       val vocab = sh.groupBy("sh").agg(count(lit(1)).as("df"))
       vocab.write.mode("overwrite").parquet(s"$path/vocab")
@@ -358,23 +401,21 @@ object Dedup {
       import scala.concurrent.Future
       import scala.concurrent.ExecutionContext.Implicits.global
       // bucket count derived from the TRUE posting volume (Σ plen — one
-      // aggregation over the checkpointed profiles) and recorded in the
+      // aggregation over the checkpointed profiles, which also counts the
+      // profile rows for the region's `_rows` sidecar) and recorded in the
       // sidecar BEFORE the postings land under it; the layout marker
       // still commits the index as a whole strictly last
-      val buckets = deriveBuckets {
-        val r = frozen.agg(sum(col("plen"))).head()
-        if (r.isNullAt(0)) 0L else r.getLong(0)
-      }
-      writeBuckets(spark, path, buckets)
-      val fProfiles = Future {
-        profileRows(frozen)
-          .repartitionByRange(profileFiles, col("id")).sortWithinPartitions("id")
-          .write.mode("overwrite").parquet(s"$path/profiles/part=base")
-      }
+      val agg = frozen.agg(sum(col("plen")), count(lit(1))).head()
+      val buckets = deriveBuckets(if (agg.isNullAt(0)) 0L else agg.getLong(0))
+      writeSidecar(spark, new org.apache.hadoop.fs.Path(path, BucketsFile), buckets)
+      val fProfiles = Future(writeProfiles(spark,
+        profileRows(frozen).repartitionByRange(profileFiles, col("id")).sortWithinPartitions("id"),
+        s"$path/profiles/part=base", agg.getLong(1)))
       val fPostings = Future(writePostings(frozen, s"$path/prefix/part=base", buckets))
       awaitAll(fProfiles, fPostings)
       // marker LAST: a crashed partial build never reads as a valid index
       writeLayout(spark, path)
+      frozen
     }
 
     /** A profile table's data columns ([[ProfilesSchema]] less `part`). */
@@ -422,34 +463,32 @@ object Dedup {
       ()
     }
 
-    /** [[append]], returning the live root and the batch's checkpointed
-      * frozen profile: the vocab an append reads is the one a following
-      * [[query]] of the same batch would freeze against (appends never
-      * touch it), so [[DedupService]] hands both to [[queryProfile]]
-      * instead of freezing the batch twice. */
+    /** [[append]], returning the live root, the batch's checkpointed
+      * frozen profile and its row count: the vocab an append reads is the
+      * one a following [[query]] of the same batch would freeze against
+      * (appends never touch it), so [[DedupService]] hands all three to
+      * [[queryProfile]] instead of freezing or counting the batch again. */
     private[ops] def appendProfile(spark: SparkSession, path: String, batch: DataFrame,
                                    n: Int, threshold: Double,
-                                   region: String): (String, DataFrame) = {
+                                   region: String): (String, DataFrame, Long) = {
       val root = liveRoot(spark, path)
       requireLayout(spark, root)
       val reg = if (region.nonEmpty) region else nextRegion(spark, root)
-      val frozen = freeze(batch, readVocab(spark, root), n, threshold)
-        .localCheckpoint(true)
+      val (frozen, rows) = graft.operators.LocalRoute.checkpoint(
+        freeze(batch, readVocab(spark, root), n, threshold))
       // independent region writes off the checkpointed batch profiles —
       // overlapped like build's
       import scala.concurrent.Future
       import scala.concurrent.ExecutionContext.Implicits.global
-      val fProfiles = Future {
-        profileRows(frozen)
-          .repartitionByRange(col("id")).sortWithinPartitions("id")
-          .write.mode("overwrite").parquet(s"$root/profiles/part=$reg")
-      }
+      val fProfiles = Future(writeProfiles(spark,
+        profileRows(frozen).repartitionByRange(col("id")).sortWithinPartitions("id"),
+        s"$root/profiles/part=$reg", rows))
       // append rows MUST land under the modulus the index was built with
       // (the sidecar), or reader pruning would miss them
       val fPostings = Future(writePostings(frozen, s"$root/prefix/part=$reg",
         postingBuckets(spark, root)))
       awaitAll(fProfiles, fPostings)
-      (root, frozen)
+      (root, frozen, rows)
     }
 
     /** The LAZY candidate stage of [[query]] (exposed so plans are
@@ -522,15 +561,15 @@ object Dedup {
               maxBatchFraction: Double = 0.10): DataFrame = {
       val root = liveRoot(spark, path)
       requireLayout(spark, root)
-      val bprof = freeze(batch, readVocab(spark, root), n, threshold)
-        .localCheckpoint(true)
-      queryProfile(spark, root, bprof, threshold, maxPushIds, maxBatchFraction)
+      val (bprof, batchN) = graft.operators.LocalRoute.checkpoint(
+        freeze(batch, readVocab(spark, root), n, threshold))
+      queryProfile(spark, root, bprof, batchN, threshold, maxPushIds, maxBatchFraction)
     }
 
-    /** [[query]] from the batch's checkpointed frozen profile `bprof` at
-      * an already-resolved live `root`. */
+    /** [[query]] from the batch's checkpointed frozen profile `bprof`, of
+      * `batchN` rows, at an already-resolved live `root`. */
     private[ops] def queryProfile(spark: SparkSession, root: String, bprof: DataFrame,
-                                  threshold: Double, maxPushIds: Int = 10000,
+                                  batchN: Long, threshold: Double, maxPushIds: Int = 10000,
                                   maxBatchFraction: Double = 0.10): DataFrame = {
       // BATCH-FRACTION routing (VERDICT r9 #3): the broadcast-batch +
       // pruned-postings plan below is the O(delta) shape — its wins
@@ -544,7 +583,6 @@ object Dedup {
       // the query routes to [[queryOversized]]: one profiles-table SSJoin
       // pass, no postings read, no batch broadcast. Same output either
       // way (NearDupIndexSpec pins equality across the gate).
-      val batchN = bprof.count()
       val indexedN = indexedProfileCount(spark, root)
       if (indexedN > 0 && batchN > maxBatchFraction * indexedN)
         return queryOversized(spark, root, bprof, threshold)
@@ -580,10 +618,14 @@ object Dedup {
       verifyJaccard(cand, sets.select(col("id"), col("vset"), col("nsh")), threshold)
     }
 
-    /** The routing gate's denominator, memoized per (root, profiles-dir
-      * mtime): the daily serving case is a tiny batch against a stable
-      * index, and paying a corpus-sized file-listing + footer-count job
-      * on EVERY query just to decide the route defeats the route. An
+    /** The routing gate's denominator: the sum of the regions' `_rows`
+      * sidecars (one listing and a small read per region, no Spark job).
+      * The daily serving case is a tiny batch against a stable index, and
+      * paying a corpus-sized file-listing + footer-count job on EVERY
+      * query just to decide the route defeats the route.
+      *
+      * An index with a region written before the sidecars existed falls
+      * back to a count memoized per (root, profiles-dir mtime): an
       * append creates a new `part=` region dir, bumping the parent
       * mtime → recount. (On stores without directory mtimes the cache
       * may serve a stale count after an append — a ROUTING input only:
@@ -592,12 +634,25 @@ object Dedup {
     private val profileCountCache =
       new java.util.concurrent.ConcurrentHashMap[(String, Long), Long]()
 
-    private def indexedProfileCount(spark: SparkSession, root: String): Long = {
+    private[graft] def indexedProfileCount(spark: SparkSession, root: String): Long =
+      sidecarProfileCount(spark, root).getOrElse {
+        val p = new org.apache.hadoop.fs.Path(s"$root/profiles")
+        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val mtime = fs.getFileStatus(p).getModificationTime
+        profileCountCache.computeIfAbsent((root, mtime),
+          _ => readProfiles(spark, root).count())
+      }
+
+    /** The profile row count from the regions' `_rows` sidecars: equal to
+      * `readProfiles(spark, root).count()`, rows a re-appended batch
+      * duplicates included. None when some region has no sidecar. */
+    private[graft] def sidecarProfileCount(spark: SparkSession, root: String): Option[Long] = {
       val p = new org.apache.hadoop.fs.Path(s"$root/profiles")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val mtime = fs.getFileStatus(p).getModificationTime
-      profileCountCache.computeIfAbsent((root, mtime),
-        _ => readProfiles(spark, root).count())
+      val regions = fs.listStatus(p).toIndexedSeq
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("part="))
+      val counts = regions.map(r => readSidecar(spark, new org.apache.hadoop.fs.Path(r.getPath, RowsFile)))
+      if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
     }
 
     /** The OVERSIZED-BATCH route of [[query]]: when the batch is a

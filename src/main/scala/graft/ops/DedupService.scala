@@ -9,14 +9,23 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 /** The maintained corpus-dedup SERVICE: the full daily loop behind
   * q_dedup_cc_incr as one persisted, crash-safe API — a
   * [[Dedup.NearDupIndex]] (frozen-order SSJoin postings) plus a
-  * component labeling, advanced one batch at a time at O(delta):
+  * component labeling, advanced one batch at a time:
   *
-  *  1. `init(base)` — index the base corpus, solve components once,
-  *     commit the labeling snapshot;
-  *  2. `ingest(batchId, docs)` — batch pairs from the persisted index
-  *     (no corpus rescan), supernode fold-in
-  *     ([[graft.operators.GraphOps2.incrementalComponents]]), commit the
-  *     new labeling, append the batch to the index.
+  *  1. `init(base)` — index the base corpus, solve components once over
+  *     the index's own frozen profiles (no second shingle pass), commit
+  *     the labeling snapshot;
+  *  2. `ingest(batchId, docs)` — append the batch to the index, query
+  *     its pairs from the persisted index (no corpus rescan), fold them
+  *     in ([[graft.operators.GraphOps2.incrementalComponents]], the same
+  *     fold q_dedup_cc_incr runs), commit the new labeling.
+  *
+  * Cost per batch: the index append and the pair query are O(delta);
+  * the fold-in's re-solve is bounded by the components the batch
+  * touches. The labeling commit is NOT: it rewrites every
+  * (doc_id, component) row of the corpus on every batch (ROADMAP
+  * direction 6 is the O(delta) commit). Each intermediate is
+  * materialized once and carries its row count
+  * ([[graft.operators.LocalRoute.checkpoint]]).
   *
   * Crash safety composes from the parts: index regions are
   * overwrite-idempotent `part=<batch>` dirs, the labeling commits via
@@ -103,16 +112,19 @@ object DedupService {
     val spark = docs.sparkSession
     graft.sources.WriterLease.ensure(spark, path, "init")
     graft.sources.WriterLease.ensure(spark, indexDir(path), "init")
-    Dedup.NearDupIndex.build(docs, indexDir(path))
+    // the index's frozen profiles are the corpus's live-order profiles at
+    // build time, so their SSJoin is nearDupEdges(docs) without a second
+    // shingle pass
+    val profiles = Dedup.NearDupIndex.buildProfile(docs, indexDir(path))
     val comp = graft.operators.GraphOps2.connectedComponents(
-      Dedup.nearDupEdges(docs), 20)
+      Dedup.prefixPairs(profiles, 0.5).select(col("id_a").as("src"), col("id_b").as("dst")), 20)
     val lbl = docs.select(col("doc_id"))
       .join(comp, col("doc_id") === col("node"), "left")
       .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("component"))
     commitLabels(spark, path, lbl, batchId = 0L)
   }
 
-  /** Fold one batch in at O(delta). Replay-safe under the streaming
+  /** Fold one batch in (cost: see above). Replay-safe under the streaming
     * micro-batch contract (ids handed out monotonically): batchId ==
     * lastBatch is the benign committed-batch replay and skips WITHOUT
     * touching the index (its region already holds the committed run's
@@ -142,22 +154,25 @@ object DedupService {
         s"carries $last) — restarting the stream with a fresh checkpoint " +
         "against an existing service path would corrupt the index")
     // 1. index append — overwrite-idempotent region write; the query
-    // reuses the batch profile the append froze
-    val (root, bprof) = Dedup.NearDupIndex.appendProfile(spark, indexDir(path), batch,
-      n = 3, threshold = 0.5, region = s"b$batchId")
-    val pairs = Dedup.NearDupIndex.queryProfile(spark, root, bprof, threshold = 0.5)
+    // reuses the batch profile the append froze, and its row count
+    val (root, bprof, batchN) = Dedup.NearDupIndex.appendProfile(spark, indexDir(path),
+      batch, n = 3, threshold = 0.5, region = s"b$batchId")
+    val pairs = Dedup.NearDupIndex.queryProfile(spark, root, bprof, batchN, threshold = 0.5)
       .select(col("id_a").as("src"), col("id_b").as("dst"))
-    val c0 = labels(spark, path)
+    val old = labels(spark, path)
       .select(col("doc_id").as("node"), col("component").as("lbl"))
-    val merged = graft.operators.GraphOps2.incrementalComponents(c0, pairs)
-    // pair-less batch docs are their own singletons; fold-in output wins
-    val lbl = c0.select(col("node").as("doc_id"))
-      .unionByName(batch.select(col("doc_id")))
-      .distinct()
-      .join(merged, col("doc_id") === col("node"), "left")
-      .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("component"))
-      .localCheckpoint(true) // materialize BEFORE the swap renames our input
-    commitLabels(spark, path, lbl, batchId)
+    // 2. the batch's docs the labeling lacks join it as singletons
+    // (materialized once: the fold-in reads its c0 several times), then
+    // the fold-in merges the components the batch's pairs touch
+    val (fresh, _) = graft.operators.LocalRoute.checkpoint(
+      batch.select(col("doc_id").cast(LongType).as("node")).distinct()
+        .join(old.select("node"), Seq("node"), "left_anti")
+        .select(col("node"), col("node").as("lbl")))
+    val merged = graft.operators.GraphOps2.incrementalComponents(old.unionByName(fresh), pairs)
+    // 3. the staged write reads the live snapshot; it finishes before the
+    // swap renames anything, so no checkpoint sits in between
+    commitLabels(spark, path, merged.select(col("node").as("doc_id"), col("lbl").as("component")),
+      batchId)
   }
 
   /** Streaming twin: foreachBatch drives [[ingest]] with the

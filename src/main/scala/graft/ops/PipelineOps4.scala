@@ -423,8 +423,9 @@ object PipelineOps4 {
   /** Driver replay of [[distributedNnDescent]]'s rounds over the
     * collected (rid-indexed) vectors — bit-identical by construction:
     * the congruential init's long arithmetic, the reverse-neighbor
-    * ρ-sample's (xxhash64(src·1000003+dst), dst) order (the exact
-    * catalyst XXH64 with seed 42, JVM overflow wrap and all), the set
+    * ρ-sample's (xxhash64(src·1000003+dst), dst) order
+    * ([[graft.functions.SparkSemantics.xxhash64Long]], JVM overflow wrap
+    * and all), the set
     * semantics of the candidate dedup (collect_set ≙ HashSet), the
     * fused dot/na/nb cosine fold of [[graft.functions.CosineSimilarity]],
     * and Spark's nan-safe double ordering for the (cv DESC, dst ASC)
@@ -467,8 +468,7 @@ object PipelineOps4 {
       var p = 0
       while (p < n) {
         val ordered = rev(p).sortBy(d =>
-          (org.apache.spark.sql.catalyst.expressions.XXH64
-            .hashLong(p.toLong * 1000003L + d, 42L), d))
+          (graft.functions.SparkSemantics.xxhash64Long(p.toLong * 1000003L + d), d))
         val set = new java.util.HashSet[java.lang.Long]()
         edges(p).foreach(d => { set.add(d); () })
         ordered.take(k).foreach(d => { set.add(d); () })

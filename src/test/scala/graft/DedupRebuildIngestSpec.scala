@@ -117,4 +117,27 @@ class DedupRebuildIngestSpec extends SparkSpec {
       assert(queryPairs(idx, probe) == wantPairs, s"post-crash-$crashAt convergence")
     }
   }
+
+  test("the profiles' _rows sidecars sum to the profile count; without them the count falls back") {
+    val idx = s"/tmp/graft_rebuild_ingest/rows_${System.nanoTime()}"
+    def profileRows: Long = Dedup.NearDupIndex.readProfiles(spark, idx).count()
+    def summed(step: String): Unit =
+      assert(Dedup.NearDupIndex.sidecarProfileCount(spark, idx) === Some(profileRows), step)
+    Dedup.NearDupIndex.build(part(0), idx)
+    summed("build")
+    Dedup.NearDupIndex.append(spark, idx, part(1), region = "b1")
+    summed("append")
+    Dedup.NearDupIndex.append(spark, idx, part(1), region = "b1")
+    summed("replayed append")
+    Dedup.NearDupIndex.append(spark, idx, part(1)) // the same batch again: duplicate rows
+    summed("re-appended batch")
+    Dedup.NearDupIndex.rebuild(spark, idx, upTo(1))
+    summed("rebuild")
+    Dedup.NearDupIndex.append(spark, idx, part(2), region = "b2")
+    val fs = new org.apache.hadoop.fs.Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(new org.apache.hadoop.fs.Path(s"$idx/profiles"))
+      .foreach(r => fs.delete(new org.apache.hadoop.fs.Path(r.getPath, "_rows"), false))
+    assert(Dedup.NearDupIndex.sidecarProfileCount(spark, idx).isEmpty)
+    assert(Dedup.NearDupIndex.indexedProfileCount(spark, idx) === profileRows)
+  }
 }

@@ -106,4 +106,14 @@ class DedupServiceSpec extends SparkSpec {
       DedupService.ingest(spark, path, 9L, docs.limit(3))
     }
   }
+
+  test("init's pairs from the index's frozen profiles equal nearDupEdges") {
+    val path = s"/tmp/graft_dedupsvc/${System.nanoTime()}"
+    val profiles = Dedup.NearDupIndex.buildProfile(docs, path)
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val want = pairs(Dedup.nearDupEdges(docs))
+    assert(want.nonEmpty, "degenerate corpus: no near-dup pair")
+    assert(pairs(Dedup.prefixPairs(profiles, 0.5).select("id_a", "id_b")) == want)
+  }
 }

@@ -75,4 +75,16 @@ class IncrCcSpec extends SparkSpec {
     assert(incr.exists { case (id, comp) => id != comp },
       "degenerate scenario: no non-trivial cluster at this SF")
   }
+
+  test("a fold with zero new edges returns c0 unchanged and runs no CC round") {
+    import spark.implicits._
+    val c0 = GraphOps2.connectedComponents(Seq((1L, 2L), (5L, 6L)).toDF("src", "dst"), 20)
+      .localCheckpoint(true)
+    val none = Seq((1L, 2L)).toDF("src", "dst").filter(lit(false))
+    graft.operators.LocalRoute.drain()
+    val (got, m) = Measure(spark)(GraphOps2.incrementalComponents(c0, none))
+    assert(got eq c0)
+    assert(m.jobs === 0, s"job sites: ${m.jobSites}")
+    assert(graft.operators.LocalRoute.drain().isEmpty, "a CC round ran")
+  }
 }

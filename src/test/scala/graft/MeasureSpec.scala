@@ -29,5 +29,9 @@ class MeasureSpec extends SparkSpec {
         "graft.Measure$.apply(Measure.scala:2)\n" +
         "graft.ops.Dedup$NearDupIndex$.$anonfun$query$1(Dedup.scala:3)\n" +
         "graft.Bench$.main(Bench.scala:4)").contains("query at Dedup.scala:3"))
+    assert(Measure.graftFrame(
+      "graft.operators.LocalRoute$.checkpoint(LocalRoute.scala:1)\n" +
+        "graft.operators.GraphOps2$.connectedComponents(GraphOps2.scala:2)")
+      .contains("connectedComponents at GraphOps2.scala:2"))
   }
 }

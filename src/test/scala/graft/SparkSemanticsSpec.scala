@@ -125,4 +125,38 @@ class SparkSemanticsSpec extends SparkSpec {
     assert(LocalRoute.rows(df, 10L, "spec", eligible = LocalRoute.longKeyed(df)).isEmpty)
     assert(LocalRoute.drain() === Seq(LocalRoute.Record("spec", "rows", -1L, 10L, "distributed")))
   }
+
+  test("LocalRoute.checkpoint's observed count equals count()") {
+    import spark.implicits._
+    val inputs = Seq(
+      "empty" -> spark.range(0).toDF("id"),
+      "optimizer-emptied" -> spark.range(10).toDF("id").filter(lit(false)),
+      "LocalRelation" -> Seq(1L, 2L, 3L).toDF("id"),
+      "multi-partition aggregate" ->
+        spark.range(0, 1000, 1, 8).groupBy((col("id") % 37).as("k")).count())
+    inputs.foreach { case (name, df) =>
+      val (cp, n) = LocalRoute.checkpoint(df)
+      assert(n === df.count(), name)
+      assert(cp.count() === n, name)
+    }
+  }
+
+  test("LocalRoute.rows on a checkpoint's known count fires no job") {
+    val (cp, n) = LocalRoute.checkpoint(spark.range(0, 100, 1, 4).toDF("id"))
+    LocalRoute.drain()
+    val (none, m) = Measure(spark)(LocalRoute.rows(cp, 10L, "spec", known = Some(n)))
+    assert(none.isEmpty)
+    assert(m.jobs === 0, s"job sites: ${m.jobSites}")
+    assert(LocalRoute.drain() === Seq(LocalRoute.Record("spec", "rows", 100L, 10L, "distributed")))
+  }
+
+  test("xxhash64Long is Spark's xxhash64 on a BIGINT") {
+    import spark.implicits._
+    val xs = Seq(0L, 1L, -1L, 42L, Long.MinValue, Long.MaxValue, Int.MinValue.toLong,
+      Int.MaxValue.toLong + 1L, 7L * 1000003L + 3L, -123456789012345L) ++
+      (1 to 200).map(i => i.toLong * 0x9E3779B97F4A7C15L)
+    val want = xs.toDF("x").select(col("x"), xxhash64(col("x"))).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    xs.foreach(x => assert(SparkSemantics.xxhash64Long(x) === want(x), s"x = $x"))
+  }
 }
