@@ -68,13 +68,13 @@ object GraphOps {
   def coSupplyBfs(s: SparkSession, d: String, sources: DataFrame, maxHops: Int,
                   driverMaxEdges: Long = GraphOps2.DriverCcMaxEdges): DataFrame = {
     // eager localCheckpoints: constant-size plans across hops (PLANS.md r2)
-    val ps = T.lineitem(s, d)
+    val (ps, m) = LocalRoute.checkpoint(T.lineitem(s, d)
       .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"))
-      .distinct().localCheckpoint(true)
+      .distinct())
     // driver route (see LocalRoute): hop distances are exact set
     // algebra over local adjacency maps; the distributed loop pays ~3
     // jobs per hop (two incidence joins + frontier checkpoint)
-    LocalRoute.rows(ps, driverMaxEdges, "coSupplyBfs",
+    LocalRoute.rows(ps, m.getLong(0), driverMaxEdges, "coSupplyBfs",
         LocalRoute.longKeyed(ps)).foreach { rows =>
       import s.implicits._
       val inc = rows.map(r => (r.getLong(0), r.getLong(1)))
@@ -286,10 +286,13 @@ object GraphOps {
                         driverMaxEdges: Long = DriverClosureMaxEdges): DataFrame = {
     // eager localCheckpoint per round: the doubling self-join references
     // the closure THREE times (join x2 + union), so without plan
-    // truncation the logical plan grows 3^rounds (see PLANS.md round 2)
-    var closure = edges.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(true)
-    LocalRoute.rows(closure, driverMaxEdges, "transitiveClosure").foreach { rows =>
+    // truncation the logical plan grows 3^rounds (see PLANS.md round 2).
+    // Each checkpoint observes its own path count, which the route and
+    // the growth test read.
+    val (base, m) = LocalRoute.checkpoint(edges.select(col("src"), col("dst")).distinct())
+    var closure = base
+    var nPaths = m.getLong(0)
+    LocalRoute.rows(closure, nPaths, driverMaxEdges, "transitiveClosure").foreach { rows =>
       driverClosure(rows, maxDepth) match {
         case Some(pairs) =>
           return LocalRoute.relation(edges.sparkSession,
@@ -299,17 +302,15 @@ object GraphOps {
             DriverClosureMaxPaths)
       }
     }
-    var nPaths = closure.count()
     var depth = 1
     var grew = true
     while (depth < maxDepth && grew) {
-      val doubled = closure.as("l")
+      val (doubled, dm) = LocalRoute.checkpoint(closure.as("l")
         .join(closure.as("r"), col("l.dst") === col("r.src"))
         .select(col("l.src").as("src"), col("r.dst").as("dst"))
         .union(closure)
-        .distinct()
-        .localCheckpoint(true)
-      val n = doubled.count()
+        .distinct())
+      val n = dm.getLong(0)
       grew = n > nPaths
       nPaths = n
       closure = doubled

@@ -33,31 +33,25 @@ object GraphOps2 {
     * iterations reuse the same exchange. */
   def pagerankInt(edges: DataFrame, iters: Int,
                   driverMaxEdges: Long = DriverCcMaxEdges,
-                  inputMaterialized: Boolean = false): DataFrame = {
+                  inputRows: Option[Long] = None): DataFrame = {
     // localCheckpoint (eager) truncates the LOGICAL plan each round, not
     // just the RDD lineage — without it every round's plan embeds the
     // previous round's, and Catalyst itself becomes the bottleneck. On a
     // cluster use a reliable checkpoint dir instead (executor loss).
-    // inputMaterialized: the caller vouches `edges` is a cheap projection
-    // over already-checkpointed blocks (the qPagerank/qPpr mirror-union
-    // shape) — a second eager materialization here would re-store the
-    // full edge set just to save re-running a projection (r14 profile:
-    // the double checkpoint was a full extra pass per query).
-    val e = if (inputMaterialized) edges.select("src", "dst")
-            else e0Checkpoint(edges.select("src", "dst"))
-    LocalRoute.rows(e, driverMaxEdges, "pagerankInt", LocalRoute.longKeyed(e)).foreach { rows =>
+    val (e, n) = materialized(edges.select("src", "dst"), inputRows)
+    LocalRoute.rows(e, n, driverMaxEdges, "pagerankInt", LocalRoute.longKeyed(e)).foreach { rows =>
       return driverPrRounds(e.sparkSession, longPairs(rows), seeds = None, iters)
     }
-    val deg = e0Checkpoint(e.groupBy("src").agg(count(lit(1)).as("d")))
+    val (deg, degM) = LocalRoute.checkpoint(e.groupBy("src").agg(count(lit(1)).as("d")))
     // degree folded into the edge table ONCE: each round then needs a
     // single edge⋈rank join (the per-edge `pr div d` replicates a value
     // that is constant per src — pure ALU, no extra shuffle), instead of
     // a rank⋈degree join followed by the edge join every round.
     val ed = e0Checkpoint(e.join(deg, "src"))
     // mid-size band (see BcastMaxNodes): broadcast the node-sized
-    // rank table each round so the edge table never re-shuffles (deg is
-    // checkpointed — the node count is one cheap memory pass)
-    val bNodes = deg.count() <= BcastMaxNodes
+    // rank table each round so the edge table never re-shuffles (the node
+    // count is the one deg's checkpoint observed)
+    val bNodes = degM.getLong(0) <= BcastMaxNodes
     def b(df: DataFrame): DataFrame = if (bNodes) broadcast(df) else df
     var pr = deg.select(col("src").as("node"), lit(PrScale).as("pr"))
     for (i <- 1 to iters) {
@@ -82,6 +76,20 @@ object GraphOps2 {
   /** Eager localCheckpoint: materializes and swaps the logical plan for a
     * LogicalRDD — constant-size plans across iterative rounds. */
   private def e0Checkpoint(df: DataFrame): DataFrame = df.localCheckpoint(true)
+
+  /** A routed operator's input and its row count. `inputRows` is the count
+    * a caller vouches for when `edges` is a cheap projection over blocks it
+    * already materialized (the mirror-union shape of qPagerank, qPpr,
+    * qLabelProp and qShortestPath: a union of a checkpointed frame and its
+    * mirror has exactly twice its rows) — a second eager materialization
+    * would re-store the full edge set just to save re-running a projection
+    * (r14 profile: the double checkpoint was a full extra pass per query).
+    * Otherwise the input is checkpointed and its count observed. */
+  private def materialized(edges: DataFrame, inputRows: Option[Long]): (DataFrame, Long) =
+    inputRows.fold {
+      val (cp, m) = LocalRoute.checkpoint(edges)
+      (cp, m.getLong(0))
+    }(n => (edges, n))
 
   private def longPairs(rows: Array[Row]): Array[(Long, Long)] =
     rows.map(r => (r.getLong(0), r.getLong(1)))
@@ -137,18 +145,17 @@ object GraphOps2 {
     * PrTeleport·1[node ∈ seeds], carried on the anchored node table. */
   def pprInt(edges: DataFrame, seeds: DataFrame, iters: Int,
              driverMaxEdges: Long = DriverCcMaxEdges,
-             inputMaterialized: Boolean = false): DataFrame = {
-    val e = if (inputMaterialized) edges.select("src", "dst") // see pagerankInt
-            else e0Checkpoint(edges.select("src", "dst"))
-    LocalRoute.rows(e, driverMaxEdges, "pprInt", LocalRoute.longKeyed(e)).foreach { rows =>
+             inputRows: Option[Long] = None): DataFrame = {
+    val (e, n) = materialized(edges.select("src", "dst"), inputRows)
+    LocalRoute.rows(e, n, driverMaxEdges, "pprInt", LocalRoute.longKeyed(e)).foreach { rows =>
       val seedSet = seeds.select(col("node").cast("long")).distinct()
         .collect().map(_.getLong(0)).toSet
       return driverPrRounds(e.sparkSession, longPairs(rows), Some(seedSet), iters)
     }
-    val deg = e0Checkpoint(e.groupBy("src").agg(count(lit(1)).as("d")))
+    val (deg, degM) = LocalRoute.checkpoint(e.groupBy("src").agg(count(lit(1)).as("d")))
     // same degree-folded edge table as pagerankInt: one join per round
     val ed = e0Checkpoint(e.join(deg, "src"))
-    val bNodes = deg.count() <= BcastMaxNodes // see pagerankInt
+    val bNodes = degM.getLong(0) <= BcastMaxNodes // see pagerankInt
     def b(df: DataFrame): DataFrame = if (bNodes) broadcast(df) else df
     val anchored = e0Checkpoint(
       deg.select(col("src").as("node"))
@@ -201,12 +208,12 @@ object GraphOps2 {
       |SELECT node, pr FROM p3 ORDER BY node""".stripMargin) { (s, d) =>
     // checkpoint the incidence list before symmetrizing: the union refers
     // to it twice, and an uncached reference would re-run the distinct
-    val ps = T.lineitem(s, d)
+    val (ps, m) = LocalRoute.checkpoint(T.lineitem(s, d)
       .select((col("l_partkey") * 2).as("p"), (col("l_suppkey") * 2 + 1).as("sup"))
-      .distinct().localCheckpoint(true)
+      .distinct())
     val edges = ps.select(col("p").as("src"), col("sup").as("dst"))
       .union(ps.select(col("sup").as("src"), col("p").as("dst")))
-    pagerankInt(edges, 3, inputMaterialized = true).orderBy("node")
+    pagerankInt(edges, 3, inputRows = Some(2 * m.getLong(0))).orderBy("node")
   }
 
   /** Edge-count gate below which the iterative graph ops run as driver
@@ -309,10 +316,10 @@ object GraphOps2 {
     * parent per child), so a partial merge can never return silently. */
   def connectedComponents(edges: DataFrame, maxIters: Int,
                           driverMaxEdges: Long = DriverCcMaxEdges): DataFrame = {
-    val (e0, n0) = LocalRoute.checkpoint(edges.select(col("src"), col("dst"))
+    val (e0, m0) = LocalRoute.checkpoint(edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")))
-    LocalRoute.rows(e0, driverMaxEdges, "connectedComponents",
-        LocalRoute.longKeyed(e0), known = Some(n0)).foreach { rows =>
+    LocalRoute.rows(e0, m0.getLong(0), driverMaxEdges, "connectedComponents",
+        LocalRoute.longKeyed(e0)).foreach { rows =>
       return driverComponents(edges.sparkSession, longPairs(rows))
     }
     val nodes = e0Checkpoint(e0.select(col("src").as("node"))
@@ -603,15 +610,10 @@ object GraphOps2 {
     * cadence as [[pagerankInt]] (linear chain: every other round). */
   def labelPropagation(symEdges: DataFrame, iters: Int,
                        driverMaxEdges: Long = DriverCcMaxEdges,
-                       inputMaterialized: Boolean = false): DataFrame = {
-    val (e, known) =
-      if (inputMaterialized) (symEdges.select("src", "dst"), None) // see pagerankInt
-      else {
-        val (cp, n) = LocalRoute.checkpoint(symEdges.select("src", "dst"))
-        (cp, Some(n))
-      }
-    LocalRoute.rows(e, driverMaxEdges, "labelPropagation",
-        LocalRoute.longKeyed(e), known = known).foreach { rows =>
+                       inputRows: Option[Long] = None): DataFrame = {
+    val (e, n) = materialized(symEdges.select("src", "dst"), inputRows)
+    LocalRoute.rows(e, n, driverMaxEdges, "labelPropagation",
+        LocalRoute.longKeyed(e)).foreach { rows =>
       val arr = longPairs(rows)
       val spark = symEdges.sparkSession
       import spark.implicits._
@@ -698,13 +700,13 @@ object GraphOps2 {
     // materialize the halved pair stream ONCE before mirroring — a plain
     // union would recompute the fanout join + distinct in both branches
     // (same fix as qKCore's pair scan)
-    val half = e0Checkpoint(
+    val (half, m) = LocalRoute.checkpoint(
       wedged.select(col("l_partkey").as("pk"), col("l_suppkey").as("src"))
         .join(wedged.select(col("l_partkey").as("pk"), col("l_suppkey").as("dst")), "pk")
         .filter(col("src") < col("dst"))
         .select("src", "dst").distinct())
     val e = half.union(half.select(col("dst").as("src"), col("src").as("dst")))
-    labelPropagation(e, 2, inputMaterialized = true)
+    labelPropagation(e, 2, inputRows = Some(2 * m.getLong(0)))
       .select(col("node"), col("lbl").as("community"))
       .orderBy("node")
   }
@@ -787,10 +789,9 @@ object GraphOps2 {
     * long arithmetic — no float drift under any partitioning. */
   def ssspInt(edges: DataFrame, sources: DataFrame, hops: Int,
               driverMaxEdges: Long = DriverCcMaxEdges,
-              inputMaterialized: Boolean = false): DataFrame = {
-    val e = if (inputMaterialized) edges.select(col("src"), col("dst"), col("w"))
-            else e0Checkpoint(edges.select(col("src"), col("dst"), col("w"))) // see pagerankInt
-    LocalRoute.rows(e, driverMaxEdges, "ssspInt", LocalRoute.longKeyed(e)).foreach { rows =>
+              inputRows: Option[Long] = None): DataFrame = {
+    val (e, n) = materialized(edges.select(col("src"), col("dst"), col("w")), inputRows)
+    LocalRoute.rows(e, n, driverMaxEdges, "ssspInt", LocalRoute.longKeyed(e)).foreach { rows =>
       val spark = edges.sparkSession
       import spark.implicits._
       val arr = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -854,13 +855,12 @@ object GraphOps2 {
       |  SELECT e.dst, d3.dist + e.w FROM d3 JOIN e ON e.src = d3.node) GROUP BY 1)
       |SELECT node, dist FROM d4 ORDER BY node""".stripMargin) { (s, d) =>
     import s.implicits._
-    val ps = T.lineitem(s, d)
+    val (ps, m) = LocalRoute.checkpoint(T.lineitem(s, d)
       .groupBy((col("l_partkey") * 2).as("p"), (col("l_suppkey") * 2 + 1).as("sup"))
-      .agg(min(col("l_quantity")).cast("long").as("w"))
-      .localCheckpoint(true)
+      .agg(min(col("l_quantity")).cast("long").as("w")))
     val edges = ps.select(col("p").as("src"), col("sup").as("dst"), col("w"))
       .union(ps.select(col("sup").as("src"), col("p").as("dst"), col("w")))
-    ssspInt(edges, Seq(1L).toDF("node"), 4, inputMaterialized = true).orderBy("node")
+    ssspInt(edges, Seq(1L).toDF("node"), 4, inputRows = Some(2 * m.getLong(0))).orderBy("node")
   }
 
   /** Top-50 entities related to the hub supplier (node 2·1+1) by
@@ -895,12 +895,12 @@ object GraphOps2 {
       |       FROM n LEFT JOIN s3 ON s3.dst = n.node)
       |SELECT node, pr FROM p3 ORDER BY pr DESC, node LIMIT 50""".stripMargin) { (s, d) =>
     import s.implicits._
-    val ps = T.lineitem(s, d)
+    val (ps, m) = LocalRoute.checkpoint(T.lineitem(s, d)
       .select((col("l_partkey") * 2).as("p"), (col("l_suppkey") * 2 + 1).as("sup"))
-      .distinct().localCheckpoint(true)
+      .distinct())
     val edges = ps.select(col("p").as("src"), col("sup").as("dst"))
       .union(ps.select(col("sup").as("src"), col("p").as("dst")))
-    pprInt(edges, Seq(3L).toDF("node"), 3, inputMaterialized = true)
+    pprInt(edges, Seq(3L).toDF("node"), 3, inputRows = Some(2 * m.getLong(0)))
       .orderBy(col("pr").desc, col("node")).limit(50)
   }
 
@@ -910,14 +910,15 @@ object GraphOps2 {
     * re-solve runs on supernodes — its size is bounded by the edges the
     * batch TOUCHES, not the corpus. Labels are min-ids, and min over a
     * merged set = min of the parts' mins, so composing labelings is
-    * exact. Returns (node, lbl) for every node in c0 ∪ newEdges.
+    * exact. Returns (node, lbl) for every node in c0 and every endpoint
+    * of a new edge that is not a self-loop (as [[connectedComponents]]
+    * labels).
     *
-    * The new edges are materialized once (the collapse and the new-node
-    * set both read them); with none, `c0` returns unchanged and no CC
-    * round runs. */
+    * The new edges are materialized once, with their observed count;
+    * with none, `c0` returns unchanged and no CC round runs. */
   def incrementalComponents(c0: DataFrame, newEdges: DataFrame): DataFrame = {
-    val (edges, n) = LocalRoute.checkpoint(newEdges.select("src", "dst"))
-    if (n == 0L) return c0
+    val (edges, m) = LocalRoute.checkpoint(newEdges.select("src", "dst"))
+    if (m.getLong(0) == 0L) return c0
     val lblSrc = c0.select(col("node").as("src"), col("lbl").as("lsrc"))
     val lblDst = c0.select(col("node").as("dst"), col("lbl").as("ldst"))
     val collapsed = edges
@@ -927,13 +928,17 @@ object GraphOps2 {
         coalesce(col("ldst"), col("dst")).as("dst"))
       .filter(col("src") =!= col("dst"))
     val c1 = connectedComponents(collapsed, 20)
-    // old nodes re-route their label through the supernode re-solve;
-    // new-edge endpoints not in c0 enter labeled by their own id, which
-    // no c0 label equals (labels are c0 nodes), so the same c1 join
-    // relabels both
-    val newNodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node"))).distinct()
-      .join(c0.select(col("node")), Seq("node"), "left_anti")
+    // The new endpoints come from the re-solve's own output: `collapsed`
+    // keeps every edge that touches a node outside c0, since its other
+    // end is another new node or a c0 label, and no c0 label (a c0 node)
+    // equals a new node. So c1's nodes are the touched supernodes plus
+    // every new endpoint (a new node seen only on a self-loop is no CC
+    // node, as in a from-scratch solve), and anti-joining c0 leaves the
+    // new ones without a shuffle over the edges. Old nodes re-route their
+    // label through the supernode re-solve; new nodes enter labeled by
+    // their own id, which no c0 label equals, so the same c1 join
+    // relabels both.
+    val newNodes = c1.select(col("node")).join(c0.select(col("node")), Seq("node"), "left_anti")
     c0.select(col("node"), col("lbl"))
       .union(newNodes.select(col("node"), col("node").as("lbl")))
       .join(c1.select(col("node").as("lbl"), col("lbl").as("l1")), Seq("lbl"), "left")
@@ -992,10 +997,9 @@ object GraphOps2 {
     // doesn't depend on the corpus — so the split is exact.
     val pairs = graft.ops.Dedup.jaccardPairsPrefix(docs, "doc_id", "text", 3, 0.5)
       .select("id_a", "id_b").localCheckpoint(true)
-    val c0 = connectedComponents(
+    val (c0, _) = LocalRoute.checkpoint(connectedComponents(
       pairs.filter(!isB(col("id_a")) && !isB(col("id_b")))
-        .select(col("id_a").as("src"), col("id_b").as("dst")), 20)
-      .localCheckpoint(true)
+        .select(col("id_a").as("src"), col("id_b").as("dst")), 20))
     val newPairs = pairs.filter(isB(col("id_a")) || isB(col("id_b")))
       .select(col("id_a").as("src"), col("id_b").as("dst"))
     val merged = incrementalComponents(c0, newPairs)

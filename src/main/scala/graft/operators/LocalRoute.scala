@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.{LongType, StructType}
 
@@ -16,16 +17,16 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * the DuckDB oracles hash them per query, and the forced-route specs
   * (each operator's `driverMax*` parameter set to 0) pin them.
   *
-  * A gate counts `rows` (probed input rows), `values` (rows × vector
-  * width) or `ops` (the replay's multiply-adds). Every decision appends a
+  * A gate counts `rows` (input rows), `values` (rows × vector width) or
+  * `ops` (the replay's multiply-adds). Every size is an exact count that
+  * the operator's own eager materialization observed ([[checkpoint]]):
+  * no decision runs a probe job of its own. Every decision appends a
   * [[Record]] to a bounded driver-side buffer that [[drain]] empties. */
 object LocalRoute {
 
-  /** One routing decision. `size` is the measured input in `unit` — for a
-    * [[rows]] probe the bounded probe count, so `gate + 1` reads as "over
-    * the gate"; for a known-count decision (a [[checkpoint]]'s count) the
-    * exact count — or -1 when the input was ineligible and never
-    * measured. `arm` is `local` or `distributed`. */
+  /** One routing decision. `size` is the exact input in `unit`, or -1
+    * when the input was ineligible and not routed on its size. `arm` is
+    * `local` or `distributed`. */
   final case class Record(op: String, unit: String, size: Long, gate: Long, arm: String) {
     def json: String =
       s"""{"op":"$op","unit":"$unit","size":$size,"gate":$gate,"arm":"$arm"}"""
@@ -51,32 +52,41 @@ object LocalRoute {
     * arrive through the listener bus after the checkpoint's jobs end. */
   private val ObservationWait = scala.concurrent.duration.Duration(10, "s")
 
-  /** `df` eagerly `localCheckpoint`ed, with its exact row count: a
-    * `count(lit(1))` observation rides the checkpoint's own jobs, so the
-    * count costs no extra job. Should the metrics not arrive within
-    * [[ObservationWait]], the count falls back to a `count()` over the
-    * checkpointed blocks rather than blocking. */
-  def checkpoint(df: DataFrame): (DataFrame, Long) = {
-    val (observed, obs) = Observability.observed(df, Seq(count(lit(1)).as("rows")))
-    val cp = observed.localCheckpoint(true)
-    val n = scala.util.Try(scala.concurrent.Await.result(obs.future, ObservationWait))
-      .map(_.getLong(0)).getOrElse(cp.count())
-    (cp, n)
+  /** `df` eagerly materialized, with what its materialization observed:
+    * a row holding the exact row count followed by the `extras`
+    * aggregates (evaluated over `df`'s rows). The aggregates ride the
+    * `localCheckpoint`'s own jobs as an observation, so neither the count
+    * nor a bounds pass costs an extra job; should the metrics not arrive
+    * within [[ObservationWait]], one `agg` over the checkpointed blocks
+    * computes them instead of blocking. A `df` whose optimized plan is
+    * already a LocalRelation (every driver replay returns one) comes back
+    * as it is with its row count and runs no job; with `extras` it runs
+    * one `agg` over the local rows and no checkpoint. */
+  def checkpoint(df: DataFrame, extras: Column*): (DataFrame, Row) = {
+    val metrics = count(lit(1)).as("rows") +:
+      extras.zipWithIndex.map { case (c, i) => c.as(s"extra$i") }
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation if extras.isEmpty => (df, Row(l.data.size.toLong))
+      case _: LocalRelation => (df, df.agg(metrics.head, metrics.tail: _*).head())
+      case _ =>
+        val (observed, obs) = Observability.observed(df, metrics)
+        val cp = observed.localCheckpoint(true)
+        val row = scala.util.Try(scala.concurrent.Await.result(obs.future, ObservationWait))
+          .getOrElse(cp.agg(metrics.head, metrics.tail: _*).head())
+        (cp, row)
+    }
   }
 
-  /** The rows of `df` when it holds at most `maxRows` rows, else None. A
-    * bounded `limit(gate + 1).count()` decides executor-side (the global
-    * limit gathers at most gate + 1 rows into one task), and only an
-    * under-gate input is then collected: the over-gate path materializes
-    * nothing on the driver, where collecting the prefix just to discard
-    * it would allocate ~gate boxed Rows. `df` should be checkpointed —
-    * the probe, the collect and the distributed loop all read it. A
-    * `known` row count (from [[checkpoint]]) decides without the probe.
+  /** The rows of `df` when its `n` rows fit `maxRows`, else None: the
+    * decision reads the count the caller's own materialization observed
+    * (a [[checkpoint]]'s, or one the caller vouches for), so it runs no
+    * job, and only an under-gate input is then collected — the over-gate
+    * path materializes nothing on the driver. `df` should be
+    * materialized: the collect and the distributed loop both read it.
     * With `valuesPerRow` > 1 the decision is recorded in `values`. */
-  def rows(df: DataFrame, maxRows: Long, op: String, eligible: Boolean = true,
-           valuesPerRow: Long = 1L, known: Option[Long] = None): Option[Array[Row]] = {
-    val gate = math.min(maxRows, Int.MaxValue - 2L).toInt
-    val n = if (eligible) known.getOrElse(df.limit(gate + 1).count()) else 0L
+  def rows(df: DataFrame, n: Long, maxRows: Long, op: String, eligible: Boolean = true,
+           valuesPerRow: Long = 1L): Option[Array[Row]] = {
+    val gate = math.min(maxRows, Int.MaxValue - 2L) // a collect's array bound
     val unit = if (valuesPerRow == 1L) "rows" else "values"
     if (admit(op, unit, n * valuesPerRow, gate * valuesPerRow, eligible)) Some(df.collect())
     else None

@@ -474,8 +474,9 @@ object Dedup {
       val root = liveRoot(spark, path)
       requireLayout(spark, root)
       val reg = if (region.nonEmpty) region else nextRegion(spark, root)
-      val (frozen, rows) = graft.operators.LocalRoute.checkpoint(
+      val (frozen, m) = graft.operators.LocalRoute.checkpoint(
         freeze(batch, readVocab(spark, root), n, threshold))
+      val rows = m.getLong(0)
       // independent region writes off the checkpointed batch profiles —
       // overlapped like build's
       import scala.concurrent.Future
@@ -561,9 +562,9 @@ object Dedup {
               maxBatchFraction: Double = 0.10): DataFrame = {
       val root = liveRoot(spark, path)
       requireLayout(spark, root)
-      val (bprof, batchN) = graft.operators.LocalRoute.checkpoint(
+      val (bprof, m) = graft.operators.LocalRoute.checkpoint(
         freeze(batch, readVocab(spark, root), n, threshold))
-      queryProfile(spark, root, bprof, batchN, threshold, maxPushIds, maxBatchFraction)
+      queryProfile(spark, root, bprof, m.getLong(0), threshold, maxPushIds, maxBatchFraction)
     }
 
     /** [[query]] from the batch's checkpointed frozen profile `bprof`, of

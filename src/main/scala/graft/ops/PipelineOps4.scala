@@ -325,24 +325,28 @@ object PipelineOps4 {
   private[graft] def nnDescentGraph(vecs: DataFrame, k: Int, rounds: Int,
                                     driverMaxDoubles: Long = NnDescentDriverMaxDoubles): DataFrame = {
     val spark = vecs.sparkSession
-    // The congruential init needs a dense 0..n-1 node numbering. One
-    // narrow bounds pass decides the route: vec ids that are already
-    // dense (the common layout) ARE the numbering — no work; otherwise a
-    // range-partitioned distributed rank builds it (never a global
+    // The congruential init needs a dense 0..n-1 node numbering. The
+    // vectors' one checkpoint (rid = vec_id) observes the bounds that
+    // decide the route: vec ids that are already dense (the common
+    // layout) ARE the numbering and that checkpoint is `ev`; otherwise a
+    // range-partitioned distributed rank is built from it (never a global
     // single-task window). Both routes yield the same rid on dense ids,
-    // so the oracle (ROW_NUMBER over vec_id) covers both. The same pass
-    // carries max vector width for the driver-route gate below.
-    val b = vecs.agg(min(col("vec_id")), max(col("vec_id")), count(lit(1)),
-      max(size(col("v"))), count(col("vec_id")), count(col("v"))).head
-    val n = b.getLong(2)
-    val dense = n > 0 && b.getLong(0) == 0L && b.getLong(1) == n - 1
-    val ev = (if (dense) vecs.select(col("vec_id").as("rid"), col("vec_id"), col("v"))
+    // so the oracle (ROW_NUMBER over vec_id) covers both. The same
+    // observation carries max vector width for the driver-route gate below.
+    val (cp, b) = LocalRoute.checkpoint(
+      vecs.select(col("vec_id").as("rid"), col("vec_id"), col("v")),
+      min(col("vec_id")), max(col("vec_id")), max(size(col("v"))),
+      count(col("vec_id")), count(col("v")))
+    val n = b.getLong(0)
+    val dense = n > 0 && b.getLong(1) == 0L && b.getLong(2) == n - 1
+    val ev = if (dense) cp
     else {
-      val base = vecs.select(col("vec_id"), col("v"))
+      val base = cp.select(col("vec_id"), col("v"))
         .withColumn("__g", lit(0)).withColumn("one", lit(1L))
       PipelineOps3.exclusivePrefixSum(base, "__g", Seq("vec_id"), "one", 32)
         .select(col("pre").as("rid"), col("vec_id"), col("v"))
-    }).localCheckpoint(true)
+        .localCheckpoint(true)
+    }
     // driver route (see LocalRoute) for the iterative middle only — the
     // loop pays ~6 Spark jobs per round; the scored rows return through
     // the SHARED final projection below. Null vectors or ids stay on it.

@@ -491,32 +491,25 @@ object Similarity {
                         maxSample: Long = 1L << 20,
                         driverMaxValues: Long = DriverKmeansMaxValues): Array[Array[Double]] = {
     import org.apache.spark.sql.types.DecimalType
-    // driver route (see LocalRoute): 3 bounded Spark jobs (dim probe,
-    // row-count probe, collect) instead of ~3 jobs per Lloyd round (r14
-    // profile: the 4-round distributed fit cost ~1s of serialized
-    // single-task stages per ANN-family query at sf0.1)
-    driverSampleRows(kmeansSample(vecs, maxSample), k, driverMaxValues) match {
-      case Some(rows) if rows.nonEmpty =>
-        return driverLloyd(rows, k, iters)
-      case Some(_) => // unlucky tiny-corpus hash-sample came back empty:
-        // same fallback as the distributed path — fit on the full input
-        driverSampleRows(vecs.select(col("id"), col("v")), k, driverMaxValues) match {
-          case Some(rows) =>
-            require(rows.nonEmpty, "fitKmeansCodebook: empty input corpus")
-            return driverLloyd(rows, k, iters)
-          case None => () // full input over the gate: distributed path below
-        }
-      case None => () // sample over the gate: distributed path below
-    }
-    val hashed = kmeansSample(vecs, maxSample).localCheckpoint(true)
     // degenerate guards: an unlucky hash-sample (tiny corpora) falls back
     // to the full input; an empty input is an error, never an empty
     // codebook (nearestCell over array() would fail analysis downstream).
     // With fewer than k sample rows the codebook is min(k, |sample|) —
     // k is an upper bound, callers must size probes off codebook.length.
-    val sample =
-      if (hashed.isEmpty) vecs.select(col("id"), col("v")).localCheckpoint(true)
-      else hashed
+    // The sample's one checkpoint observes its row count and widest
+    // vector, which the driver route (see LocalRoute) decides on: the
+    // route then costs one collect instead of ~3 jobs per Lloyd round
+    // (r14 profile: the 4-round distributed fit cost ~1s of serialized
+    // single-task stages per ANN-family query at sf0.1).
+    val widest = max(size(col("v")))
+    val (hashed, hm) = LocalRoute.checkpoint(kmeansSample(vecs, maxSample), widest)
+    val (sample, m) =
+      if (hm.getLong(0) == 0L) LocalRoute.checkpoint(vecs.select(col("id"), col("v")), widest)
+      else (hashed, hm)
+    driverSampleRows(sample, m, k, driverMaxValues).foreach { rows =>
+      require(rows.nonEmpty, "fitKmeansCodebook: empty input corpus")
+      return driverLloyd(rows, k, iters)
+    }
     var cents: Array[Array[Double]] = sample
       .orderBy(xxhash64(col("id"), lit(7)), col("id")).limit(k)
       .select("v").collect().map(_.getSeq[Double](0).toArray)
@@ -551,17 +544,16 @@ object Similarity {
     * distributed path. */
   val DriverKmeansMaxValues: Long = 1L << 21
 
-  /** The (id, v, xxhash64(id, 7)) rows of `sample` when rows × dim fits
-    * `maxValues`: one dim probe (head), then [[LocalRoute.rows]]. None
-    * when over the gate; Some(empty) propagates an empty sample so the
-    * caller can apply its fallback. */
-  private def driverSampleRows(sample: DataFrame, k: Int, maxValues: Long)
+  /** The (id, v, xxhash64(id, 7)) rows of the checkpointed `sample` when
+    * rows × dim fits `maxValues`, deciding on `m`, the (count,
+    * max(size(v))) its checkpoint observed (on a uniform-width sample the
+    * widest vector is every vector's width). None when over the gate; an
+    * empty sample is Some(empty). */
+  private def driverSampleRows(sample: DataFrame, m: Row, k: Int, maxValues: Long)
       : Option[Array[(Long, Array[Double], Long)]] = {
-    val p = sample.select(col("id"), col("v"), xxhash64(col("id"), lit(7)).as("hk"))
-    val dimRow = p.select(size(col("v")).as("d")).head(1)
-    if (dimRow.isEmpty) return Some(Array.empty)
-    val dim = math.max(1, dimRow(0).getInt(0))
-    LocalRoute.rows(p, math.max(k.toLong, maxValues / dim), "fitKmeansCodebook",
+    val dim = if (m.isNullAt(1)) 1 else math.max(1, m.getInt(1))
+    LocalRoute.rows(sample.select(col("id"), col("v"), xxhash64(col("id"), lit(7)).as("hk")),
+        m.getLong(0), math.max(k.toLong, maxValues / dim), "fitKmeansCodebook",
         valuesPerRow = dim).map(_.map(r =>
       (r.getLong(0), r.getSeq[Double](1).toArray, r.getLong(2))))
   }

@@ -70,6 +70,15 @@ class SizeRoutedGraphSpec extends SparkSpec {
     assert(d(2L) === 6L, "the 1→5→2 path (6) must beat the direct edge (10)")
   }
 
+  test("q_label_prop routes on twice its half edge set's observed count") {
+    val half = graft.operators.GraphOps.coSupplyEdges(spark, TinyDir)
+      .filter(col("src") < col("dst"))
+    graft.operators.LocalRoute.drain()
+    GraphOps2.qLabelProp.fn(spark, TinyDir)
+    val lp = graft.operators.LocalRoute.drain().filter(_.op == "labelPropagation")
+    assert(lp.map(_.size) === Seq(2 * half.count()))
+  }
+
   test("labelPropagation: driver replay == distributed rounds (tie to lowest label)") {
     val driver = rows(GraphOps2.labelPropagation(symEdges, 2))
     val dist = rows(GraphOps2.labelPropagation(symEdges, 2, driverMaxEdges = 0))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 
 /** The driver replays' shared kernel, pinned against Spark's own
   * evaluation: every SparkSemantics helper on adversarial doubles, and
-  * LocalRoute's probe contract at the gate boundary. */
+  * LocalRoute's observed-count contract at the gate boundary. */
 class SparkSemanticsSpec extends SparkSpec {
 
   private def same(a: Double, b: Double): Boolean = java.lang.Double.compare(a, b) == 0
@@ -100,17 +100,16 @@ class SparkSemanticsSpec extends SparkSpec {
 
   test("LocalRoute.rows: Some at the gate, None past it with no collect job") {
     val gate = 5L
-    val at = spark.range(gate).toDF("id").localCheckpoint(true)
-    val over = spark.range(gate + 1).toDF("id").localCheckpoint(true)
+    val (at, atM) = LocalRoute.checkpoint(spark.range(gate).toDF("id"))
+    val (over, overM) = LocalRoute.checkpoint(spark.range(gate + 1).toDF("id"))
     LocalRoute.drain()
-    val (got, atStages) = stagesOf(LocalRoute.rows(at, gate, "spec"))
+    val (got, atStages) = stagesOf(LocalRoute.rows(at, atM.getLong(0), gate, "spec"))
     assert(got.map(_.map(_.getLong(0)).toSeq.sorted) === Some((0L until gate).toSeq))
     assert(atStages.exists(_.startsWith("collect")), s"probe stages: $atStages")
     assert(LocalRoute.drain() === Seq(LocalRoute.Record("spec", "rows", gate, gate, "local")))
-    val (none, overStages) = stagesOf(LocalRoute.rows(over, gate, "spec"))
+    val (none, overStages) = stagesOf(LocalRoute.rows(over, overM.getLong(0), gate, "spec"))
     assert(none.isEmpty)
-    assert(overStages.nonEmpty && !overStages.exists(_.startsWith("collect")),
-      s"probe stages: $overStages")
+    assert(!overStages.exists(_.startsWith("collect")), s"probe stages: $overStages")
     assert(LocalRoute.drain() ===
       Seq(LocalRoute.Record("spec", "rows", gate + 1, gate, "distributed")))
   }
@@ -122,7 +121,7 @@ class SparkSemanticsSpec extends SparkSpec {
     assert(df.queryExecution.logical.isInstanceOf[LocalRelation])
     assert(df.collect().map(r => (r.getLong(0), r.getString(1))).toSeq === Seq((1L, "a")))
     LocalRoute.drain()
-    assert(LocalRoute.rows(df, 10L, "spec", eligible = LocalRoute.longKeyed(df)).isEmpty)
+    assert(LocalRoute.rows(df, 1L, 10L, "spec", eligible = LocalRoute.longKeyed(df)).isEmpty)
     assert(LocalRoute.drain() === Seq(LocalRoute.Record("spec", "rows", -1L, 10L, "distributed")))
   }
 
@@ -135,16 +134,45 @@ class SparkSemanticsSpec extends SparkSpec {
       "multi-partition aggregate" ->
         spark.range(0, 1000, 1, 8).groupBy((col("id") % 37).as("k")).count())
     inputs.foreach { case (name, df) =>
-      val (cp, n) = LocalRoute.checkpoint(df)
+      val (cp, m) = LocalRoute.checkpoint(df)
+      val n = m.getLong(0)
+      assert(m.length === 1, name)
       assert(n === df.count(), name)
       assert(cp.count() === n, name)
+      // the extra aggregates ride the same materialization and equal a
+      // plain agg over the input
+      val c = col(df.columns.head)
+      val extras = Seq(min(c), max(c), count(c), sum(c))
+      val (cpx, mx) = LocalRoute.checkpoint(df, extras: _*)
+      assert(mx.getLong(0) === n, name)
+      assert(mx.toSeq.tail === df.agg(extras.head, extras.tail: _*).head().toSeq, name)
+      assert(cpx.count() === n, name)
     }
+  }
+
+  test("LocalRoute.checkpoint: a LocalRelation comes back as it is, with no job") {
+    import spark.implicits._
+    val df = Seq(1L, 2L, 3L).toDF("id")
+    val ((cp, m), sample) = Measure(spark)(LocalRoute.checkpoint(df))
+    assert(cp eq df)
+    assert(m.getLong(0) === 3L)
+    assert(sample.jobs === 0, s"job sites: ${sample.jobSites}")
+  }
+
+  test("LocalRoute.checkpoint's extra aggregates cost no job beyond the checkpoint") {
+    def input = spark.range(0, 1000, 1, 8).groupBy((col("id") % 37).as("k")).count()
+    val (_, plain) = Measure(spark)(LocalRoute.checkpoint(input))
+    val ((_, m), withExtras) = Measure(spark)(
+      LocalRoute.checkpoint(input, min(col("k")), max(col("count"))))
+    assert(m.toSeq === Seq(37L, 0L, 28L))
+    assert(withExtras.jobs === plain.jobs,
+      s"plain: ${plain.jobSites}; with extras: ${withExtras.jobSites}")
   }
 
   test("LocalRoute.rows on a checkpoint's known count fires no job") {
     val (cp, n) = LocalRoute.checkpoint(spark.range(0, 100, 1, 4).toDF("id"))
     LocalRoute.drain()
-    val (none, m) = Measure(spark)(LocalRoute.rows(cp, 10L, "spec", known = Some(n)))
+    val (none, m) = Measure(spark)(LocalRoute.rows(cp, n.getLong(0), 10L, "spec"))
     assert(none.isEmpty)
     assert(m.jobs === 0, s"job sites: ${m.jobSites}")
     assert(LocalRoute.drain() === Seq(LocalRoute.Record("spec", "rows", 100L, 10L, "distributed")))
