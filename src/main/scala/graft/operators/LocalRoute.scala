@@ -58,16 +58,14 @@ object LocalRoute {
     * `localCheckpoint`'s own jobs as an observation, so neither the count
     * nor a bounds pass costs an extra job; should the metrics not arrive
     * within [[ObservationWait]], one `agg` over the checkpointed blocks
-    * computes them instead of blocking. A `df` whose optimized plan is
-    * already a LocalRelation (every driver replay returns one) comes back
-    * as it is with its row count and runs no job; with `extras` it runs
-    * one `agg` over the local rows and no checkpoint. */
+    * computes them instead of blocking. Without `extras`, a `df` whose
+    * optimized plan is already a LocalRelation (every driver replay
+    * returns one) comes back as it is with its row count and runs no job. */
   def checkpoint(df: DataFrame, extras: Column*): (DataFrame, Row) = {
     val metrics = count(lit(1)).as("rows") +:
       extras.zipWithIndex.map { case (c, i) => c.as(s"extra$i") }
     df.queryExecution.optimizedPlan match {
       case l: LocalRelation if extras.isEmpty => (df, Row(l.data.size.toLong))
-      case _: LocalRelation => (df, df.agg(metrics.head, metrics.tail: _*).head())
       case _ =>
         val (observed, obs) = Observability.observed(df, metrics)
         val cp = observed.localCheckpoint(true)

@@ -343,9 +343,16 @@ object PipelineOps4 {
     else {
       val base = cp.select(col("vec_id"), col("v"))
         .withColumn("__g", lit(0)).withColumn("one", lit(1L))
-      PipelineOps3.exclusivePrefixSum(base, "__g", Seq("vec_id"), "one", 32)
+      val ranked = PipelineOps3.exclusivePrefixSum(base, "__g", Seq("vec_id"), "one", 32)
         .select(col("pre").as("rid"), col("vec_id"), col("v"))
         .localCheckpoint(true)
+      // `ranked` is materialized and no longer reads `cp`: free cp's
+      // blocks rather than hold a second stored copy of the vectors
+      cp.queryExecution.logical match {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+        case _ =>
+      }
+      ranked
     }
     // driver route (see LocalRoute) for the iterative middle only — the
     // loop pays ~6 Spark jobs per round; the scored rows return through

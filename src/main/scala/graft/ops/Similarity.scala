@@ -506,9 +506,14 @@ object Similarity {
     val (sample, m) =
       if (hm.getLong(0) == 0L) LocalRoute.checkpoint(vecs.select(col("id"), col("v")), widest)
       else (hashed, hm)
-    driverSampleRows(sample, m, k, driverMaxValues).foreach { rows =>
+    // on a uniform-width sample the widest vector is every vector's width
+    val dim = if (m.isNullAt(1)) 1 else math.max(1, m.getInt(1))
+    LocalRoute.rows(sample.select(col("id"), col("v"), xxhash64(col("id"), lit(7))),
+        m.getLong(0), math.max(k.toLong, driverMaxValues / dim), "fitKmeansCodebook",
+        valuesPerRow = dim).foreach { rows =>
       require(rows.nonEmpty, "fitKmeansCodebook: empty input corpus")
-      return driverLloyd(rows, k, iters)
+      return driverLloyd(rows.map(r =>
+        (r.getLong(0), r.getSeq[Double](1).toArray, r.getLong(2))), k, iters)
     }
     var cents: Array[Array[Double]] = sample
       .orderBy(xxhash64(col("id"), lit(7)), col("id")).limit(k)
@@ -543,20 +548,6 @@ object Similarity {
     * well under a second; a 100 TB corpus' 1M-row sample stays on the
     * distributed path. */
   val DriverKmeansMaxValues: Long = 1L << 21
-
-  /** The (id, v, xxhash64(id, 7)) rows of the checkpointed `sample` when
-    * rows × dim fits `maxValues`, deciding on `m`, the (count,
-    * max(size(v))) its checkpoint observed (on a uniform-width sample the
-    * widest vector is every vector's width). None when over the gate; an
-    * empty sample is Some(empty). */
-  private def driverSampleRows(sample: DataFrame, m: Row, k: Int, maxValues: Long)
-      : Option[Array[(Long, Array[Double], Long)]] = {
-    val dim = if (m.isNullAt(1)) 1 else math.max(1, m.getInt(1))
-    LocalRoute.rows(sample.select(col("id"), col("v"), xxhash64(col("id"), lit(7)).as("hk")),
-        m.getLong(0), math.max(k.toLong, maxValues / dim), "fitKmeansCodebook",
-        valuesPerRow = dim).map(_.map(r =>
-      (r.getLong(0), r.getSeq[Double](1).toArray, r.getLong(2))))
-  }
 
   /** Local replay of the distributed Lloyd rounds, arithmetic-identical:
     *  - init = first k sample vectors by (xxhash64(id,7), id) — the same
